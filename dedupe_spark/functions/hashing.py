@@ -85,15 +85,23 @@ def minhash_udf(text: pd.Series) -> pd.Series:
 def lsh_band_keys(sig_col, n_bands: int = 32, rows_per_band: int = 4):
     """Column expr: minhash signature array → array of band-key strings.
 
-    Key = "band_index:xxhash of the band's slice" — computed JVM-side
-    (slice + hash of the stringified band), no second Python hop.
+    Key = "mh<band_index>:xxhash of the band's slice" — computed
+    JVM-side (slice + hash of the stringified band), no second Python
+    hop. One ``transform`` lambda, not ``n_bands`` unrolled
+    expressions, so the driver builds the same small plan whatever the
+    band count. The lambda walks ``n_bands`` references to the
+    signature rather than naming ``sig_col`` itself: Spark rejects a
+    Python UDF inside a lambda, and ``sig_col`` may be one.
     """
-    bands = []
-    for b in range(n_bands):
+
+    def band_key(sig, b):
         lo = b * rows_per_band + 1  # F.slice is 1-indexed
-        band = F.slice(sig_col, lo, rows_per_band)
-        bands.append(F.concat_ws(":", F.lit(f"mh{b}"), F.xxhash64(band.cast("string"))))
-    return F.array(*bands)
+        band = F.slice(sig, lo, F.lit(rows_per_band))
+        return F.concat_ws(
+            ":", F.concat(F.lit("mh"), b.cast("string")), F.xxhash64(band.cast("string"))
+        )
+
+    return F.transform(F.array_repeat(sig_col, n_bands), band_key)
 
 
 def _splitmix64(h: np.ndarray) -> np.ndarray:

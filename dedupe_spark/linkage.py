@@ -12,8 +12,10 @@ express:
 Every stage is the already-tested operator (pairs.generate_pairs,
 metablocking.prune_cnp, fs.*, cc.assign_all,
 survivorship.golden_records); this module only wires them. Scale
-notes live with each operator; nothing here adds a collect beyond
-fs's 2K+2 EM scalars per iteration.
+notes live with each operator. The (id1, id2, agree_*) table is built
+once and lineage-truncated (localCheckpoint), then feeds both EM and
+scoring; the only collect here is EM's agreement-pattern histogram
+(at most 3^K rows for K comparisons).
 """
 
 from __future__ import annotations
@@ -120,7 +122,11 @@ def link_records(
             max_block_size=config.max_block_size,
         )
 
-    pair_feats = _agreements(pairs, records, id_col, config.compare_cols)
+    # EM's histogram and the scoring below both read this table, so
+    # pair generation and the agreement joins run once, not twice
+    pair_feats = _agreements(pairs, records, id_col, config.compare_cols).localCheckpoint(
+        eager=True
+    )
 
     # u from pseudo-random (almost surely non-matching) pairs seeds EM
     # on the right side of the mixture; EM then refines both classes

@@ -127,17 +127,21 @@ def connected_components(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
+    def _driver_finish(pdf: pd.DataFrame) -> DataFrame:
+        rows = _driver_union_find(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+        out = pd.DataFrame(rows, columns=["node", "cluster_id"])
+        return spark.createDataFrame(out, "node long, cluster_id long")
+
     cur = _truncate(_canon(edges))
+    # one bounded collect (Arrow transfer — no per-row Row objects)
+    # both answers "small enough?" and fetches the edges when it is;
+    # the fingerprint aggregate runs only for the distributed loop
+    head = cur.limit(driver_finish_edges + 1).toPandas()
+    if len(head) <= driver_finish_edges:
+        return _driver_finish(head)
     fp = _fingerprint(cur)
     converged = False
     for _ in range(max_iter):
-        if fp[0] <= driver_finish_edges:
-            pdf = cur.toPandas()  # Arrow transfer — no per-row Row objects
-            rows = _driver_union_find(
-                zip(pdf["src"].tolist(), pdf["dst"].tolist())
-            )
-            out = pd.DataFrame(rows, columns=["node", "cluster_id"])
-            return spark.createDataFrame(out, "node long, cluster_id long")
         nxt = _truncate(_small_star(_large_star(cur)))
         nfp = _fingerprint(nxt)
         cur = nxt
@@ -145,6 +149,8 @@ def connected_components(
             converged = True
             break
         fp = nfp
+        if fp[0] <= driver_finish_edges:
+            return _driver_finish(cur.toPandas())
     if not converged:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # Converged: every edge is (node, component_min).

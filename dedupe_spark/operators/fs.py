@@ -16,18 +16,19 @@ Parameter estimation, both standard practice:
     almost surely a non-match, so agreement rates on random pairs
     estimate u directly.
   * ``estimate_m_u_em`` — unsupervised EM over binary agreement
-    vectors (the classic two-class latent mixture): the E-step's
-    per-pair match responsibility and the M-step's weighted agreement
-    rates are ONE Spark aggregate per iteration.
+    vectors (the classic two-class latent mixture). A pair's match
+    responsibility depends only on its agreement pattern, so EM runs
+    on the pattern histogram (the fastLink design, Enamorado, Fifield
+    & Imai, APSR 2019): ONE Spark aggregate in total, then every
+    iteration in numpy on the driver.
 
 Scale notes (north_rule):
   * scoring is a pure JVM projection over the candidate-pair table —
     all weights are precomputed Python floats embedded as literals, so
     whole-stage codegen keeps the hot path shuffle-free;
-  * EM never collects pair data: each iteration reduces to 2K+2
-    scalars (K = number of comparisons); the agreement table is
-    lineage-truncated once (localCheckpoint, the cc.py idiom) so
-    iteration i doesn't replay i-1 plans;
+  * EM never collects pair data: the pattern histogram has at most
+    2^K rows (3^K with NULLs; K = number of comparisons), whatever
+    the pair count, and the iteration count adds no Spark job;
   * ``random_pairs`` reuses ``snm.distributed_rank`` — no global
     single-task sort, no RNG (xxhash64 of the id ⇒ identical pairing
     at any parallelism);
@@ -40,6 +41,8 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+
+import numpy as np
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -235,9 +238,16 @@ def estimate_m_u_em(
 
     E-step: r = λ·Π m^γ(1-m)^(1-γ) / (that + (1-λ)·Π u^γ(1-u)^(1-γ)).
     M-step: m_k = Σ r·γ_k / Σ r, u_k = Σ (1-r)·γ_k / Σ (1-r),
-    λ = Σ r / n. Each iteration is ONE aggregate producing 2K+2
-    scalars; pair rows never reach the driver. Parameters are clamped
-    to [eps, 1-eps] so a degenerate corpus can't zero a likelihood.
+    λ = Σ r / n. Parameters are clamped to [eps, 1-eps] so a
+    degenerate corpus can't zero a likelihood.
+
+    r depends on a pair only through its agreement pattern, so every
+    sum above is a count-weighted sum over the DISTINCT patterns
+    (fastLink, Enamorado, Fifield & Imai, APSR 2019): one
+    ``groupBy(agree_*).count()`` — at most 2^K rows, 3^K with NULLs —
+    is the only Spark job, and all ``n_iter`` rounds run in numpy on
+    the driver. A NULL agreement counts as disagreement in the E-step
+    and adds nothing in the M-step.
 
     Identifiability caveat (standard for this model): with fewer than
     3 comparisons the binary mixture has more parameters than
@@ -247,12 +257,19 @@ def estimate_m_u_em(
     """
     if n_iter <= 0:
         raise ValueError(f"estimate_m_u_em: n_iter must be positive, got {n_iter}")
-    g = pairs.select(
-        *[F.col(c).cast("double").alias(c) for c in agree_cols]
-    ).localCheckpoint(eager=True)
-    n = g.count()
-    if n == 0:
+    hist = (
+        pairs.groupBy(*[F.col(c).cast("double").alias(c) for c in agree_cols])
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .collect()
+    )
+    if not hist:
         raise ValueError("estimate_m_u_em: empty pair table")
+    cnt = np.array([row["_n"] for row in hist], dtype=np.float64)
+    # a NULL agreement becomes NaN, which fails > 0.5
+    gamma = np.array([[row[c] for c in agree_cols] for row in hist], dtype=np.float64)
+    agree = gamma > 0.5
+    weight = np.nan_to_num(gamma, nan=0.0)
+    n = float(cnt.sum())
 
     def clamp(x: float) -> float:
         return min(1.0 - eps, max(eps, x))
@@ -261,27 +278,24 @@ def estimate_m_u_em(
     u = {c: init_u for c in agree_cols}
     lam = init_lambda
     for _ in range(n_iter):
-        num = F.lit(lam)
-        den = F.lit(1.0 - lam)
-        for c in agree_cols:
-            num = num * F.when(F.col(c) > 0.5, F.lit(m[c])).otherwise(F.lit(1.0 - m[c]))
-            den = den * F.when(F.col(c) > 0.5, F.lit(u[c])).otherwise(F.lit(1.0 - u[c]))
-        # double underflow guard: with many features the two literal
-        # products can BOTH underflow to 0.0 (num+den == 0 → 0/0 → NaN
-        # poisons every sum); an uninformative 0.5 keeps EM moving
-        r = (
-            F.when(num + den == 0.0, F.lit(0.5)).otherwise(num / (num + den))
-        ).alias("_r")
-        agged = g.select(r, *agree_cols).agg(
-            F.sum("_r").alias("_sr"),
-            *[F.sum(F.col(c) * F.col("_r")).alias(f"_m_{c}") for c in agree_cols],
-            *[F.sum(F.col(c) * (1.0 - F.col("_r"))).alias(f"_u_{c}") for c in agree_cols],
-        ).first()
-        sr = float(agged["_sr"])
+        num = np.full(len(hist), lam)
+        den = np.full(len(hist), 1.0 - lam)
+        for j, c in enumerate(agree_cols):
+            num = num * np.where(agree[:, j], m[c], 1.0 - m[c])
+            den = den * np.where(agree[:, j], u[c], 1.0 - u[c])
+        # double underflow guard: with many features the two products
+        # can BOTH underflow to 0.0 (num+den == 0 → 0/0 → NaN poisons
+        # every sum); an uninformative 0.5 keeps EM moving
+        tot = num + den
+        with np.errstate(invalid="ignore"):
+            r = np.where(tot == 0.0, 0.5, num / tot)
+        cr = cnt * r
+        cnr = cnt * (1.0 - r)
+        sr = float(cr.sum())
         snr = n - sr
         if sr <= 0.0 or snr <= 0.0:
             break  # all mass on one class — nothing left to estimate
-        m = {c: clamp(float(agged[f"_m_{c}"]) / sr) for c in agree_cols}
-        u = {c: clamp(float(agged[f"_u_{c}"]) / snr) for c in agree_cols}
+        m = {c: clamp(float(cr @ weight[:, j]) / sr) for j, c in enumerate(agree_cols)}
+        u = {c: clamp(float(cnr @ weight[:, j]) / snr) for j, c in enumerate(agree_cols)}
         lam = clamp(sr / n)
     return m, u, lam

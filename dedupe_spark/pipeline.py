@@ -28,6 +28,7 @@ query loop is S4's join, the md5-on-demand is S5, tag propagation
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +42,7 @@ from dedupe_spark.operators.extract import extract_docs
 from dedupe_spark.operators.pairs import attach_texts, generate_pairs
 from dedupe_spark.sources.checkpoints import StageIO
 
+log = logging.getLogger(__name__)
 
 # Canonical stage order; valid --stop-after values (s8_report ≡ full run).
 STAGES = (
@@ -255,7 +257,11 @@ def run_pipeline(
             n_capped = capped.count()
             if n_capped:
                 # never silent (SURVEY.md §7.4) — surfaced in logs + metrics
-                print(f"[pairs] WARNING: {n_capped} blocks exceeded max_block_size and were capped")
+                log.warning(
+                    "%d blocks exceeded max_block_size=%s and were capped",
+                    n_capped,
+                    cfg.max_block_size,
+                )
         return p
 
     pairs = stage("s4_pairs", build_pairs, "s3_keys")

@@ -35,8 +35,9 @@ def main() -> None:
     from dedupe_spark.pipeline import PipelineConfig, run_pipeline
     from dedupe_spark.session import get_spark
 
+    cores = len(os.sched_getaffinity(0))
     spark = get_spark(
-        "robustness", cores=32, shuffle_partitions=64,
+        "robustness", cores=cores, shuffle_partitions=2 * cores,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),

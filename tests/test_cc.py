@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark.operators.cc import assign_all, connected_components
@@ -125,3 +126,18 @@ def test_reliable_checkpoint_path(spark, tmp_path):
     import os
 
     assert os.listdir(str(tmp_path / "ckpt")), "no reliable checkpoint written"
+
+
+@pytest.mark.parametrize("driver_finish_edges,loop", [(5, False), (4, True)])
+def test_cc_driver_finish_threshold(spark, monkeypatch, driver_finish_edges, loop):
+    """5 canonical edges: exactly at the threshold they are union-found
+    on the driver with no fingerprint aggregate; one over it they take
+    the distributed rounds. Same assignments either way."""
+    from dedupe_spark.operators import cc
+
+    calls = []
+    real = cc._fingerprint
+    monkeypatch.setattr(cc, "_fingerprint", lambda e: calls.append(1) or real(e))
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 5)]
+    _run(spark, edges, driver_finish_edges=driver_finish_edges)
+    assert bool(calls) == loop

@@ -1,6 +1,7 @@
 """Fellegi–Sunter: weights/probabilities against a pure-Python oracle,
 parameter validation, deterministic random pairing, u-estimation
-against the analytic value, and EM recovery of planted parameters."""
+against the analytic value, EM recovery of planted parameters, and the
+histogram EM against the per-round aggregate formulation."""
 
 from __future__ import annotations
 
@@ -178,3 +179,92 @@ def test_fs_decisions_validation(spark):
         fs_decisions(df, 0.9, 0.1)
     with pytest.raises(ValueError):
         decision_sql(0.9, 0.1, "p")
+
+
+def _em_per_round(pairs, agree_cols, n_iter, init_m=0.9, init_u=0.1, init_lambda=0.1, eps=1e-6):
+    """The per-round EM formulation: one Spark aggregate over every
+    pair per iteration. Kept only as the oracle for the histogram EM."""
+    g = pairs.select(*[F.col(c).cast("double").alias(c) for c in agree_cols])
+    n = g.count()
+
+    def clamp(x):
+        return min(1.0 - eps, max(eps, x))
+
+    m = {c: init_m for c in agree_cols}
+    u = {c: init_u for c in agree_cols}
+    lam = init_lambda
+    for _ in range(n_iter):
+        num = F.lit(lam)
+        den = F.lit(1.0 - lam)
+        for c in agree_cols:
+            num = num * F.when(F.col(c) > 0.5, F.lit(m[c])).otherwise(F.lit(1.0 - m[c]))
+            den = den * F.when(F.col(c) > 0.5, F.lit(u[c])).otherwise(F.lit(1.0 - u[c]))
+        r = F.when(num + den == 0.0, F.lit(0.5)).otherwise(num / (num + den)).alias("_r")
+        agged = g.select(r, *agree_cols).agg(
+            F.sum("_r").alias("_sr"),
+            *[F.sum(F.col(c) * F.col("_r")).alias(f"_m_{c}") for c in agree_cols],
+            *[F.sum(F.col(c) * (1.0 - F.col("_r"))).alias(f"_u_{c}") for c in agree_cols],
+        ).first()
+        sr = float(agged["_sr"])
+        snr = n - sr
+        if sr <= 0.0 or snr <= 0.0:
+            break
+        m = {c: clamp(float(agged[f"_m_{c}"]) / sr) for c in agree_cols}
+        u = {c: clamp(float(agged[f"_u_{c}"]) / snr) for c in agree_cols}
+        lam = clamp(sr / n)
+    return m, u, lam
+
+
+def _assert_same_params(got, want):
+    (m, u, lam), (m0, u0, lam0) = got, want
+    assert m.keys() == m0.keys() and u.keys() == u0.keys()
+    for c in m0:
+        assert m[c] == pytest.approx(m0[c], rel=1e-9)
+        assert u[c] == pytest.approx(u0[c], rel=1e-9)
+    assert lam == pytest.approx(lam0, rel=1e-9)
+
+
+def test_em_histogram_matches_per_round_reference(spark):
+    df, _, _ = _planted_pairs(spark)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    for n_iter, init in ((40, {}), (7, {"init_m": 0.95, "init_u": 0.3, "init_lambda": 0.4})):
+        _assert_same_params(
+            estimate_m_u_em(df, cols, n_iter=n_iter, **init),
+            _em_per_round(df, cols, n_iter, **init),
+        )
+
+
+def test_em_histogram_nullable_column_matches_reference(spark):
+    """A NULL agreement is a third pattern value: it must act as
+    disagreement in the E-step and add nothing in the M-step, exactly
+    as in the per-round formulation."""
+    rng = random.Random(31)
+    rows = []
+    for _ in range(3000):
+        match = rng.random() < 0.25
+        p = (0.9, 0.8, 0.85) if match else (0.2, 0.1, 0.15)
+        a, b, c = (rng.random() < q for q in p)
+        rows.append((a, None if rng.random() < 0.2 else b, c))
+    df = spark.createDataFrame(rows, "agree_a boolean, agree_b boolean, agree_c boolean")
+    cols = ["agree_a", "agree_b", "agree_c"]
+    assert df.where(F.col("agree_b").isNull()).count() > 0
+    _assert_same_params(
+        estimate_m_u_em(df, cols, n_iter=25), _em_per_round(df, cols, 25)
+    )
+
+
+def test_em_spark_jobs_independent_of_iterations(spark):
+    """Every EM round runs on the driver over the pattern histogram,
+    so the Spark job count does not grow with n_iter."""
+    df, _, _ = _planted_pairs(spark, n=2000)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    df = df.select(*cols).localCheckpoint(eager=True)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(n_iter):
+        before = set(tracker.getJobIdsForGroup(None))
+        estimate_m_u_em(df, cols, n_iter=n_iter)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    n5 = jobs(5)
+    assert n5 >= 1 and n5 == jobs(40)

@@ -110,3 +110,31 @@ def test_simhash_band_keys_cover_64_bits(spark):
     df = spark.createDataFrame([(-1,)], "sh long")  # all bits set
     row = df.select(simhash_band_keys(F.col("sh")).alias("k")).collect()[0]
     assert row["k"] == [f"sh{b}:65535" for b in range(4)]
+
+
+def _unrolled_band_keys(sig_col, n_bands, rows_per_band):
+    """The band-key formula written out one expression per band."""
+    return F.array(
+        *[
+            F.concat_ws(
+                ":",
+                F.lit(f"mh{b}"),
+                F.xxhash64(F.slice(sig_col, b * rows_per_band + 1, rows_per_band).cast("string")),
+            )
+            for b in range(n_bands)
+        ]
+    )
+
+
+@pytest.mark.parametrize("n_bands,rows_per_band", [(32, 3), (8, 16)])
+def test_lsh_band_keys_match_unrolled_formula(spark, n_bands, rows_per_band):
+    rng = np.random.default_rng(7)
+    texts = [_rand_text(rng, 40) for _ in range(20)] + ["", "one two"]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string").select(
+        "id", minhash_udf("text").alias("sig")
+    )
+    got = df.select("id", lsh_band_keys(F.col("sig"), n_bands, rows_per_band).alias("k"))
+    want = df.select("id", _unrolled_band_keys(F.col("sig"), n_bands, rows_per_band).alias("k"))
+    g = {r["id"]: r["k"] for r in got.collect()}
+    assert g == {r["id"]: r["k"] for r in want.collect()}
+    assert all(len(k) == n_bands for k in g.values())

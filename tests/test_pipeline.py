@@ -377,3 +377,24 @@ def test_meta_blocking_cnp_preserves_f1(spark, corpus, pipe, tmp_path):
     labeled = evaluate.labeled_same_block_pairs(doc_keys, truth)
     metrics = evaluate.pairwise_f1(labeled, out["s7_clusters"])
     assert metrics["f1"] == 1.0, metrics
+
+
+def test_capped_blocks_warn_through_logging(spark, corpus, tmp_path, caplog, capsys):
+    """Capped blocks are reported as a logging WARNING, not printed."""
+    import logging
+
+    with caplog.at_level(logging.WARNING, logger="dedupe_spark.pipeline"):
+        run_pipeline(
+            spark,
+            corpus,
+            str(tmp_path / "capped"),
+            config=PipelineConfig(max_block_size=1),
+            stop_after="s4_pairs",
+        )
+    capped = [
+        r for r in caplog.records
+        if r.name == "dedupe_spark.pipeline" and "were capped" in r.getMessage()
+    ]
+    assert len(capped) == 1 and capped[0].levelno == logging.WARNING
+    assert int(capped[0].getMessage().split()[0]) > 0
+    assert "capped" not in capsys.readouterr().out
