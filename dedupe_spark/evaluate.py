@@ -145,8 +145,10 @@ def blocking_quality(pairs: DataFrame, truth: DataFrame) -> dict[str, float | in
     Everything reduces to three O(1)-row aggregates (the pairwise_f1
     cost class): total true pairs is a per-truth-key C(size, 2) sum —
     never materialized pairwise — and candidates are flagged with two
-    equi-joins on doc_id. NULL truth keys count as unlabeled and can
-    never be a true pair. Vacuous denominators resolve to 1.0 (an
+    inner equi-joins on doc_id. Records with a NULL truth key, or absent
+    from ``truth``, are unlabeled: they are outside n, and a candidate
+    touching one is outside |candidates| (the population C(n, 2) counts),
+    so RR and PQ stay in [0, 1]. Vacuous denominators resolve to 1.0 (an
     empty candidate set over an all-singleton corpus is complete)."""
     t = truth.where(F.col("truth_key").isNotNull())
     tot = (
@@ -162,7 +164,7 @@ def blocking_quality(pairs: DataFrame, truth: DataFrame) -> dict[str, float | in
     true_pairs = int(tot["true_pairs"] or 0)
     t1 = t.select(F.col("doc_id").alias("id1"), F.col("truth_key").alias("tk1"))
     t2 = t.select(F.col("doc_id").alias("id2"), F.col("truth_key").alias("tk2"))
-    cand = pairs.select("id1", "id2").join(t1, "id1", "left").join(t2, "id2", "left")
+    cand = pairs.select("id1", "id2").join(t1, "id1").join(t2, "id2")
     agg = cand.agg(
         F.count(F.lit(1)).alias("n_cand"),
         F.sum(F.when(F.col("tk1") == F.col("tk2"), 1).otherwise(0)).alias("tp"),

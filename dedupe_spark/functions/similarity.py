@@ -192,32 +192,8 @@ def _weighted_cosine(v1: dict[int, float], v2: dict[int, float]) -> float:
     return float(dot / (n1 * n2)) if n1 and n2 else 0.0
 
 
-def tfidf_cosine_global_udf(idf: np.ndarray, sc=None):
-    """Pandas-UDF factory: cosine over ``(1 + ln tf) * idf[bucket]``
-    vectors — the corpus-weighted alternative to the pair-local
-    :func:`tfidf_cosine` (config flag ``use_global_idf`` in the
-    pipeline). Pass the SparkContext so the 512 KB IDF vector ships as
-    a proper broadcast (torrent, once per executor) instead of riding
-    every serialized task."""
-    bcast = sc.broadcast(idf) if sc is not None else None
-
-    @F.pandas_udf(T.DoubleType())
-    def udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        w = bcast.value if bcast is not None else idf
-
-        def vec(t: str) -> dict[int, float]:
-            return {k: v * w[k] for k, v in _tf_vector(t).items()}
-
-        return pd.Series(
-            [_weighted_cosine(vec(a or ""), vec(b or "")) for a, b in zip(s1, s2)],
-            dtype="float64",
-        )
-
-    return udf
-
-
 # ---------------------------------------------------------------------------
-# Doc-major feature kernels (scale path for the scoring stage)
+# Doc-major feature kernels (the pipeline's s5 scoring path)
 #
 # The pair-local UDFs above re-tokenize each text once PER PAIR; with
 # blocking fan-out a doc participates in ~10-30 candidate pairs, so the
@@ -226,7 +202,8 @@ def tfidf_cosine_global_udf(idf: np.ndarray, sc=None):
 # per-pair math pure JVM (collection functions on the prepped arrays/
 # maps) — the only Python left per pair is Jaro-Winkler's char loop.
 # operators/scoring.py composes them; the text-based UDFs stay as the
-# oracle twins (tests assert value equality on corpus pairs).
+# catalog form and the oracle twins (tests assert value equality on
+# corpus pairs).
 # ---------------------------------------------------------------------------
 
 

@@ -33,7 +33,7 @@ from dedupe_spark.operators.fs import (
     fs_score,
     random_pairs,
 )
-from dedupe_spark.operators.pairs import generate_pairs, pairs_per_block
+from dedupe_spark.operators.pairs import generate_pairs
 
 
 @dataclass
@@ -103,24 +103,13 @@ def link_records(
         raise ValueError("link_records: compare_cols must name at least one comparison")
     agree_cols = [f"agree_{c}" for c in config.compare_cols]
 
-    if config.cnp_k is not None:
-        from dedupe_spark.operators.metablocking import prune_cnp
-
-        per_block, _ = pairs_per_block(
-            keys,
-            hot_threshold=config.hot_threshold,
-            salt_buckets=config.salt_buckets,
-            max_block_size=config.max_block_size,
-        )
-        cbs = per_block.groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("weight"))
-        pairs = prune_cnp(cbs, config.cnp_k).select("id1", "id2")
-    else:
-        pairs, _ = generate_pairs(
-            keys,
-            hot_threshold=config.hot_threshold,
-            salt_buckets=config.salt_buckets,
-            max_block_size=config.max_block_size,
-        )
+    pairs, _ = generate_pairs(
+        keys,
+        hot_threshold=config.hot_threshold,
+        salt_buckets=config.salt_buckets,
+        max_block_size=config.max_block_size,
+        cnp_k=config.cnp_k,
+    )
 
     # EM's histogram and the scoring below both read this table, so
     # pair generation and the agreement joins run once, not twice

@@ -46,7 +46,7 @@ def pairs_per_block(
     Emits each canonical (id1 < id2) pair EXACTLY ONCE PER SHARED BLOCK
     (no cross-block dedup) — the multiplicity is meaningful: it is the
     common-blocks weight meta-blocking counts. ``generate_pairs`` is
-    this plus drop-block-key + distinct.
+    this plus drop-block-key + distinct (or + the CNP prune).
     """
     sizes = keys.groupBy("block_key").agg(F.count(F.lit(1)).alias("copies"))
     live = sizes.where(F.col("copies") >= 2)
@@ -118,13 +118,17 @@ def generate_pairs(
     hot_threshold: int = 1000,
     salt_buckets: int = 16,
     max_block_size: int | None = None,
+    cnp_k: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """keys(doc_id, block_key) → (pairs(id1, id2), capped_blocks).
 
     pairs are distinct canonical (id1 < id2) candidate pairs from all
     blocks with 2..max_block_size members; blocks larger than
     max_block_size (if set) are excluded and reported in capped_blocks
-    (block_key, copies).
+    (block_key, copies). With ``cnp_k`` set, the pairs are instead the
+    meta-blocking CNP survivors: the per-block stream is weighted by
+    common blocks (CBS) and each pair kept only if it ranks in the
+    top-``cnp_k`` edges of one of its endpoints.
     """
     per_block, capped = pairs_per_block(
         keys,
@@ -132,8 +136,13 @@ def generate_pairs(
         salt_buckets=salt_buckets,
         max_block_size=max_block_size,
     )
-    pairs = per_block.select("id1", "id2").distinct()
-    return pairs, capped
+    if cnp_k is None:
+        return per_block.select("id1", "id2").distinct(), capped
+    # deferred: metablocking imports this module at load time
+    from dedupe_spark.operators.metablocking import prune_cnp
+
+    cbs = per_block.groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("weight"))
+    return prune_cnp(cbs, cnp_k).select("id1", "id2"), capped
 
 
 def attach_texts(pairs: DataFrame, docs: DataFrame) -> DataFrame:

@@ -7,18 +7,22 @@ Jaccard, hashed-TF cosine, length ratio — scored by a fixed
 logistic-regression affine comparator (published-style weights in
 config; no training dependency, SURVEY.md §7.2.6).
 
-Two implementations of the same feature vector, value-parity pinned in
-tests:
+Two implementations of the same feature vector, value-parity pinned by
+the kernel-parity test in tests/test_similarity.py:
 
+* :func:`doc_features` + :func:`pair_features_from_docs` — the
+  pipeline's only s5 path (doc-major): tokenize each doc ONCE,
+  per-pair Jaccard/TF-cosine as pure-JVM collection functions; only
+  Jaro-Winkler's char alignment stays a pandas UDF. Its prep runs on
+  every representative, paired or not, so on small candidate sets it
+  costs more than the per-pair UDFs (4-core host, s5 from committed
+  s4: 1.9 s vs 1.5 s at 3k pages, 7.1 s vs 5.6 s at 20k); it is the
+  one path because the per-doc sketch+prep fusion builds on it.
 * :func:`pair_features` — per-pair text UDFs (Arrow-batched), evaluated
   ONLY on block-surviving pairs — the cheap-key-before-expensive-
   feature structure of the reference (Dedupe.java:67-79 → 104-113).
-* :func:`doc_features` + :func:`pair_features_from_docs` — the
-  pipeline DEFAULT: tokenize each doc ONCE, per-pair Jaccard/TF-cosine
-  as pure-JVM collection functions; only Jaro-Winkler's char alignment
-  stays a pandas UDF. ~20% faster at 400k pages (best-of-3,
-  interleaved) and the per-pair Python floor drops from three UDFs to
-  one.
+  The catalog queries' form (no per-doc prep pass to amortize at
+  testdata scale) and the parity reference for the doc-major kernels.
 
 Per-pair cost is bounded on long documents: Levenshtein (O(len1*len2),
 JVM codegen) compares a ``truncate_chars`` prefix (default 256) and
@@ -55,7 +59,6 @@ def pair_features(
     pairs_with_text: DataFrame,
     truncate_chars: int = 256,
     jw_chars: int = 128,
-    tf_cosine=None,
 ) -> DataFrame:
     """(id1,id2,text1,text2) → + feature columns.
 
@@ -66,10 +69,6 @@ def pair_features(
     inside the Arrow batch) a 128-char prefix. Beyond a short prefix
     neither adds signal over shingle-Jaccard/TF-cosine, which see the
     full text.
-
-    ``tf_cosine`` overrides the tf_cosine feature UDF — the pipeline
-    passes ``tfidf_cosine_global_udf(compute_idf(reps))`` when
-    corpus-level IDF weighting is enabled (``use_global_idf``).
     """
     t1, t2 = F.col("text1"), F.col("text2")
     p1 = F.substring(t1, 1, truncate_chars)
@@ -93,7 +92,7 @@ def pair_features(
         jaro_winkler_udf(j1, j2).alias("jaro_winkler"),
         lev_ratio.cast("double").alias("lev_ratio"),
         token_jaccard_udf(t1, t2).alias("jaccard3"),
-        (tf_cosine or tfidf_cosine_udf)(t1, t2).alias("tf_cosine"),
+        tfidf_cosine_udf(t1, t2).alias("tf_cosine"),
         len_ratio.alias("len_ratio"),
     )
 
@@ -150,10 +149,11 @@ def pair_features_from_docs(pairs: DataFrame, doc_feats: DataFrame) -> DataFrame
     JVM, and Jaro-Winkler (inherently pairwise char alignment) is the
     only pandas UDF — on the pre-attached 128-char prefixes.
 
-    Value parity with :func:`pair_features` (asserted in
-    tests/test_scoring.py on corpus pairs): jw/lev_ratio/len_ratio
-    bit-equal; jaccard3 equal barring a 64-bit shingle-hash collision;
-    tf_cosine equal up to float summation order (~1e-15)."""
+    Value parity with :func:`pair_features` (asserted by the
+    kernel-parity test in tests/test_similarity.py on corpus pairs):
+    jw/lev_ratio/len_ratio bit-equal; jaccard3 equal barring a 64-bit
+    shingle-hash collision; tf_cosine equal up to float summation
+    order (~1e-15)."""
     from dedupe_spark.functions.similarity import (
         jaccard_from_shingles,
         tf_cosine_from_maps,

@@ -39,7 +39,7 @@ from dedupe_spark.operators import scoring
 from dedupe_spark.operators.blocking import block_keys
 from dedupe_spark.operators.cc import assign_all
 from dedupe_spark.operators.extract import extract_docs
-from dedupe_spark.operators.pairs import attach_texts, generate_pairs
+from dedupe_spark.operators.pairs import generate_pairs
 from dedupe_spark.sources.checkpoints import StageIO
 
 log = logging.getLogger(__name__)
@@ -85,22 +85,6 @@ class PipelineConfig:
     # reaches F1=1.0 on the planted corpus without it, and skipping the
     # extra corpus pass is the cheaper default.
     use_global_idf: bool = False
-    # doc-major scoring: tokenize each representative ONCE in a per-doc
-    # prep step (scoring.doc_features) and compute Jaccard / TF-cosine
-    # per pair with pure-JVM collection functions, leaving Jaro-Winkler's
-    # char loop as the only per-pair Python. The False path is the
-    # original per-pair text UDFs (scoring.pair_features) — kept as the
-    # value-parity twin (tests assert feature equality and identical
-    # clusters between the two paths). Default None = SIZE-AWARE AUTO:
-    # doc-major above doc_major_min_reps representatives, per-pair
-    # below. Doc-major's per-doc prep UDF + wider two-sided feature
-    # attach is fixed overhead that only pays for itself once each doc
-    # rides enough candidate pairs: measured doc-major 20% faster at
-    # 400k pages / 3.17M pairs and 7% faster at 15.6k reps, but 29%
-    # SLOWER at 5k docs (r4 driver-bench regression, VERDICT r4 wrong
-    # #1) — the crossover sits between 5k and 15k reps.
-    doc_major_scoring: bool | None = None
-    doc_major_min_reps: int = 10_000
     # crawl-level URL dedup ahead of S1: keep only the newest fetch per
     # CANONICAL url (functions/urls.py — www/port/fragment/tracking-param
     # variants and refetches collapse before any content work). Off by
@@ -227,27 +211,13 @@ def run_pipeline(
         return out
 
     def build_pairs() -> DataFrame:
-        if cfg.meta_blocking_cnp_k is not None:
-            from dedupe_spark.operators.metablocking import prune_cnp
-            from dedupe_spark.operators.pairs import pairs_per_block
-
-            per_block, capped = pairs_per_block(
-                keys,
-                hot_threshold=cfg.hot_threshold,
-                salt_buckets=cfg.salt_buckets,
-                max_block_size=cfg.max_block_size,
-            )
-            cbs = per_block.groupBy("id1", "id2").agg(
-                F.count(F.lit(1)).alias("weight")
-            )
-            p = prune_cnp(cbs, cfg.meta_blocking_cnp_k).select("id1", "id2")
-        else:
-            p, capped = generate_pairs(
-                keys,
-                hot_threshold=cfg.hot_threshold,
-                salt_buckets=cfg.salt_buckets,
-                max_block_size=cfg.max_block_size,
-            )
+        p, capped = generate_pairs(
+            keys,
+            hot_threshold=cfg.hot_threshold,
+            salt_buckets=cfg.salt_buckets,
+            max_block_size=cfg.max_block_size,
+            cnp_k=cfg.meta_blocking_cnp_k,
+        )
         # The capped-block audit is an eager job over the s1→s3 lineage;
         # on a fast_mode RESUME whose scored pairs are already committed
         # the pairs are never consumed, so running it would recompute
@@ -273,7 +243,12 @@ def run_pipeline(
     # compute is the feature UDFs; the affine+sigmoid score is one more
     # column, and a separate commit would double the write of the
     # largest intermediate. Resume-from-here still never recomputes a
-    # scored pair (north_rule).
+    # scored pair (north_rule). Scoring is doc-major: each
+    # representative is tokenized once (doc_features), Jaccard and
+    # TF-cosine run per pair as JVM collection functions, and
+    # Jaro-Winkler is the only per-pair Python UDF.
+    prep: list[DataFrame] = []
+
     def build_scored() -> DataFrame:
         idf = None
         if cfg.use_global_idf:
@@ -283,37 +258,21 @@ def run_pipeline(
             # are drawn from; computed only when s5 actually builds
             # (a resume with s5 committed never pays the corpus pass)
             idf = compute_idf(reps)
-        doc_major = cfg.doc_major_scoring
-        if doc_major is None:
-            # size-aware auto path selection: one cheap count over the
-            # committed/persisted s2 stage (ids only — never the texts)
-            n_reps = exact.where(F.col("doc_id") == F.col("rep_id")).count()
-            doc_major = n_reps >= cfg.doc_major_min_reps
-        out["_doc_major"] = doc_major  # type: ignore[assignment]
-        if doc_major:
-            # per-doc prep once, per-pair math JVM-side (doc_features
-            # docstring has the cost model); replaces attach_texts —
-            # the joins ship prepped features instead of raw text.
-            # persist: pair_features_from_docs joins dfeat on BOTH pair
-            # sides (different join keys — no exchange reuse), so an
-            # unpersisted prep UDF would run twice; cleanup() releases it
-            dfeat = scoring.doc_features(
-                reps.select("doc_id", "text"), idf=idf, sc=spark.sparkContext
-            ).persist()
-            cached.append(dfeat)
-            feats = scoring.pair_features_from_docs(pairs, dfeat)
-        else:
-            from dedupe_spark.functions.similarity import tfidf_cosine_global_udf
-
-            tf_udf = (
-                tfidf_cosine_global_udf(idf, spark.sparkContext)
-                if idf is not None
-                else None
-            )
-            feats = scoring.pair_features(attach_texts(pairs, reps), tf_cosine=tf_udf)
+        # persist: pair_features_from_docs joins dfeat on BOTH pair
+        # sides (different join keys — no exchange reuse), so an
+        # unpersisted prep UDF would run twice
+        dfeat = scoring.doc_features(
+            reps.select("doc_id", "text"), idf=idf, sc=spark.sparkContext
+        ).persist()
+        prep.append(dfeat)
+        feats = scoring.pair_features_from_docs(pairs, dfeat)
         return scoring.score_pairs(feats, cfg.weights, cfg.bias)
 
     scores = stage("s5_scored", build_scored, "s4_pairs")
+    # s5 is always committed and read back, so the prep is spent here,
+    # also when stop_after returns before cleanup()
+    for df in prep:
+        df.unpersist()
     if stop_after == "s5_scored":
         out["_skipped"] = skipped  # type: ignore[assignment]
         return out

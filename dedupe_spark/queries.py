@@ -2384,21 +2384,10 @@ def q_er_pipeline_clusters(spark: SparkSession, sf: str) -> DataFrame:
     # checkpoint-to-scratch, not .persist() — no storage-cache leak
     keys = materialize(block_keys(reps), "er_pipeline_keys")
     pairs, _ = generate_pairs(keys, max_block_size=10_000)
-    # Size-aware scoring path (mirrors PipelineConfig's auto default,
-    # gated here on the parquet footers — zero Spark jobs): doc-major
-    # (per-doc prep once, materialized since BOTH pair-side joins
-    # consume it, then JVM Jaccard/TF-cosine per pair) is 20% faster at
-    # 400k pages / 3.17M pairs but 29% SLOWER at 5k docs, where the
-    # prep UDF + wider two-sided attach is pure fixed overhead (r4
-    # driver-bench regression) — below the crossover use the per-pair
-    # text-UDF twin (identical clusters; parity pinned in tests).
-    if _parquet_rows(f"{sf}/documents.parquet") >= 10_000:
-        dfeat = materialize(
-            scoring.doc_features(reps, sc=spark.sparkContext), "er_pipeline_dfeat"
-        )
-        feats = scoring.pair_features_from_docs(pairs, dfeat)
-    else:
-        feats = scoring.pair_features(attach_texts(pairs, reps))
+    # per-pair text UDFs, not the pipeline's doc-major prep: at testdata
+    # scale the per-doc prep pass over every representative does not
+    # amortize (same clusters either way; parity pinned in tests)
+    feats = scoring.pair_features(attach_texts(pairs, reps))
     match = scoring.matches(scoring.score_pairs(feats))
     edges = match.select(F.col("id1").alias("src"), F.col("id2").alias("dst")).unionByName(
         exact.where(F.col("doc_id") != F.col("rep_id")).select(
@@ -2413,15 +2402,12 @@ def q_er_pipeline_clusters(spark: SparkSession, sf: str) -> DataFrame:
 # §2.3 addenda (r5): meta-blocking over redundant key families
 # ---------------------------------------------------------------------------
 
-def q_meta_blocking_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Meta-blocking (Papadakis et al., TKDE 2014): three key families
-    (length bucket, md5 prefix, source) → blocking graph with CBS +
-    Jaccard edge weights → block purge at 64 + weighted-edge pruning at
-    the global mean CBS. Only SQL-expressible key families here so the
-    oracle can rebuild the identical graph; the production path feeds
-    ``blocking.block_keys``' LSH/SimHash families into the same
-    operator (operators/metablocking.py)."""
-    from dedupe_spark.operators.metablocking import blocking_graph, prune_wep
+def meta_blocking_graph(spark: SparkSession, sf: str) -> DataFrame:
+    """The blocking graph :func:`q_meta_blocking_pairs` prunes: three
+    key families (length bucket, md5 prefix, source) → CBS + Jaccard
+    edge weights after a block purge at 64. Separate so the plan audit
+    can inspect the graph build, which the query materializes."""
+    from dedupe_spark.operators.metablocking import blocking_graph
 
     docs = load_table(spark, sf, "documents")
     keys = (
@@ -2445,7 +2431,21 @@ def q_meta_blocking_pairs(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
     )
-    g = blocking_graph(keys, weight="js", max_block_size=64)
+    return blocking_graph(keys, weight="js", max_block_size=64)
+
+
+def q_meta_blocking_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """Meta-blocking (Papadakis et al., TKDE 2014): three key families
+    (length bucket, md5 prefix, source) → blocking graph with CBS +
+    Jaccard edge weights → block purge at 64 + weighted-edge pruning at
+    the global mean CBS. Only SQL-expressible key families here so the
+    oracle can rebuild the identical graph; the production path feeds
+    ``blocking.block_keys``' LSH/SimHash families into the same
+    operator (operators/metablocking.py)."""
+    from dedupe_spark.operators.metablocking import prune_wep
+
+    # materialized: prune_wep reads the graph twice (mean, then filter)
+    g = materialize(meta_blocking_graph(spark, sf), "meta_blocking_graph")
     # WEP thresholds on the INTEGER cbs weight: avg of exact ints is
     # bit-identical across engines; a mean over double js weights is
     # summation-order sensitive and could flip boundary edges.

@@ -48,7 +48,7 @@ def main() -> None:
     from dedupe_spark.session import get_spark
     from dedupe_spark.streaming.incremental import run_incremental_near_dedupe
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(
         "bench_streaming",
         cores=cpus,

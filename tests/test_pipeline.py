@@ -310,51 +310,51 @@ def test_fast_mode_resume_runs_no_jobs_for_pairs(spark, corpus, tmp_path):
     assert len(after) - len(before) <= 3, (before, after)
 
 
-def test_doc_major_scoring_identical_clusters(spark, corpus, pipe, tmp_path):
-    """The doc-major scoring path (per-doc prep + JVM pair math) must
-    produce IDENTICAL clusters to the per-pair text-UDF twin — same
-    features up to float summation order (tests/test_similarity pins
-    the kernels), so no score can move across the 0.5 threshold on
-    real data. The auto default (size-aware selection) must match both."""
-    _, out_auto = pipe  # module fixture ran with the auto default
-    out_doc = run_pipeline(
-        spark,
-        corpus,
-        str(tmp_path / "docpath"),
-        config=PipelineConfig(doc_major_scoring=True),
+def test_doc_major_scoring_identical_clusters(spark, corpus, pipe):
+    """The pipeline's doc-major s5 (per-doc prep + JVM pair math) must
+    match exactly the pairs the per-pair text-UDF form matches on the
+    same committed s4 pairs — same features up to float summation order
+    (tests/test_similarity pins the kernels), so no score moves across
+    the threshold on real data."""
+    from dedupe_spark.operators import scoring
+    from dedupe_spark.operators.pairs import attach_texts
+
+    _, out = pipe
+    exact = out["s2_exact"]
+    reps = (
+        exact.where(F.col("doc_id") == F.col("rep_id"))
+        .select("doc_id")
+        .join(out["s1_docs"].select("doc_id", "text"), "doc_id")
     )
-    out_text = run_pipeline(
-        spark,
-        corpus,
-        str(tmp_path / "textpath"),
-        config=PipelineConfig(doc_major_scoring=False),
+    ref = scoring.score_pairs(
+        scoring.pair_features(attach_texts(out["s4_pairs"], reps))
     )
-    a = sorted(map(tuple, out_doc["s7_clusters"].collect()))
-    b = sorted(map(tuple, out_text["s7_clusters"].collect()))
-    c = sorted(map(tuple, out_auto["s7_clusters"].collect()))
-    assert a == b == c
-    assert out_doc["_doc_major"] is True and out_text["_doc_major"] is False
+    got = sorted(map(tuple, scoring.matches(out["s5_scored"]).select("id1", "id2").collect()))
+    want = sorted(map(tuple, scoring.matches(ref).select("id1", "id2").collect()))
+    assert len(got) > 50
+    assert got == want
 
 
-def test_doc_major_auto_gate_by_rep_count(spark, corpus, tmp_path):
-    """doc_major_scoring=None (default) selects the path by
-    representative count: small corpus → per-pair (the prep UDF is pure
-    fixed overhead below the crossover), and a low threshold flips the
-    same corpus to doc-major."""
-    out_small = run_pipeline(
-        spark, corpus, str(tmp_path / "auto_small"), config=PipelineConfig()
-    )
-    assert out_small["_doc_major"] is False  # test corpus ≪ 10k reps
-    out_low = run_pipeline(
-        spark,
-        corpus,
-        str(tmp_path / "auto_low"),
-        config=PipelineConfig(doc_major_min_reps=1),
-    )
-    assert out_low["_doc_major"] is True
-    a = sorted(map(tuple, out_small["s7_clusters"].collect()))
-    b = sorted(map(tuple, out_low["s7_clusters"].collect()))
-    assert a == b
+def test_s5_build_runs_no_path_gate_job(spark, corpus, tmp_path):
+    """Building s5 from a committed s4 starts no job beyond reading the
+    committed stages and writing s5: there is one scoring path, so no
+    representative count picks between two (with that count it was 8
+    jobs on this corpus). AQE is off for the s5 build because its
+    query-stage job count for one plan differed by one between an
+    isolated run and a full-suite run."""
+    work = str(tmp_path / "s5jobs")
+    run_pipeline(spark, corpus, work, stop_after="s4_pairs")
+    tracker = spark.sparkContext.statusTracker()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        before = tracker.getJobIdsForGroup(None)
+        out = run_pipeline(spark, corpus, work, stop_after="s5_scored")
+        after = tracker.getJobIdsForGroup(None)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert out["_skipped"]["s4_pairs"] and not out["_skipped"]["s5_scored"]
+    assert len(after) - len(before) <= 7, (before, after)
 
 
 def test_meta_blocking_cnp_preserves_f1(spark, corpus, pipe, tmp_path):

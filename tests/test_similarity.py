@@ -111,11 +111,8 @@ def test_global_tfidf_cosine_matches_hand_oracle(spark):
 
     import numpy as np
 
-    from dedupe_spark.functions.similarity import (
-        TF_DIM,
-        compute_idf,
-        tfidf_cosine_global_udf,
-    )
+    from dedupe_spark.functions.similarity import TF_DIM, compute_idf
+    from dedupe_spark.operators import scoring
 
     texts = [
         "the cat sat on the mat",
@@ -139,14 +136,16 @@ def test_global_tfidf_cosine_matches_hand_oracle(spark):
         n2 = np.sqrt(sum(w * w for w in v2.values()))
         return dot / (n1 * n2)
 
-    from pyspark.sql import functions as F
-
-    pairs = spark.createDataFrame(
-        [(texts[0], texts[1]), (texts[0], texts[2]), (texts[0], texts[0])],
-        "text1 string, text2 string",
-    )
-    udf = tfidf_cosine_global_udf(idf, spark.sparkContext)
-    got = [r["c"] for r in pairs.select(udf(F.col("text1"), F.col("text2")).alias("c")).collect()]
+    # doc-major: the IDF-weighted TF vectors are prepped once per doc,
+    # the cosine runs per pair in the JVM (the pipeline's s5 path)
+    ids = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    dfeat = scoring.doc_features(ids, idf=idf, sc=spark.sparkContext)
+    pairs = spark.createDataFrame([(0, 1), (0, 2), (0, 0)], "id1 long, id2 long")
+    by_id2 = {
+        r["id2"]: r["tf_cosine"]
+        for r in scoring.pair_features_from_docs(pairs, dfeat).collect()
+    }
+    got = [by_id2[1], by_id2[2], by_id2[0]]
     want = [hand_cos(texts[0], texts[1]), hand_cos(texts[0], texts[2]), 1.0]
     assert np.allclose(got, want, atol=1e-12), (got, want)
     # IDF must actually matter: shared-stopword pair scores lower under
