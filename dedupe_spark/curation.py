@@ -188,12 +188,12 @@ def curate_corpus(
     pairs, _capped = generate_pairs(
         keys, hot_threshold=cfg.hot_threshold, salt_buckets=cfg.salt_buckets
     )
-    # doc-major Jaccard refine (same rework as the ER pipeline's
-    # scoring stage): shingle each exact-survivor ONCE — materialized,
-    # both pair-side joins consume it — and refine candidates with the
-    # JVM array kernel instead of re-tokenizing texts per pair in
-    # Python. Values identical to token_jaccard barring a 64-bit
-    # shingle-hash collision (~1e-12/pair).
+    # doc-major Jaccard refine: shingle-hash each exact-survivor ONCE
+    # (the s3 sketches' numpy hasher) — materialized, both pair-side
+    # joins consume it — and refine candidates with the JVM array
+    # kernel instead of re-tokenizing texts per pair in Python. Values
+    # identical to token_jaccard barring a 64-bit shingle-hash
+    # collision (~1e-12/pair).
     sh_tbl = materialize(
         exact.select("doc_id", shingle_hashes_udf(F.col("text")).alias("sh")),
         f"curation_shingles_{seq}",

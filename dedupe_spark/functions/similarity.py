@@ -2,9 +2,13 @@
 
 Levenshtein stays JVM-side (built-in ``F.levenshtein`` — codegen'd).
 Jaro-Winkler, token-Jaccard, and hashed-TF cosine run as Arrow-batched
-pandas UDFs over (text1, text2) pairs — the reference's analog is the
+pandas UDFs over (text1, text2) pairs — the pipeline's s5 and the
+catalog queries both score this way. The reference's analog is the
 in-block MD5 computation (Dedupe.java:104-113): the expensive feature
-evaluated only on block-surviving candidates.
+evaluated only on block-surviving candidates. Curation's Jaccard refine
+instead hashes each document's shingles once
+(:func:`shingle_hashes_udf`) and compares the sets in the JVM
+(:func:`jaccard_from_shingles`).
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dedupe_spark.functions.hashing import _shingle_hashes
 
 
 def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
@@ -124,20 +130,24 @@ def token_jaccard_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
 TF_DIM = 1 << 16
 
 
-def _tf_vector(text: str) -> dict[int, float]:
-    """Hashed log-scaled term-frequency vector (HashingTF-style)."""
+def _tf_vector(text: str, idf: np.ndarray | None = None) -> dict[int, float]:
+    """Hashed log-scaled term-frequency vector (HashingTF-style), each
+    bucket × ``idf[bucket]`` when an IDF table is given."""
     counts: dict[int, int] = {}
     for tok in text.split():
         h = zlib.crc32(tok.encode("utf-8")) % TF_DIM
         counts[h] = counts.get(h, 0) + 1
-    return {k: 1.0 + np.log(v) for k, v in counts.items()}
+    if idf is None:
+        return {k: 1.0 + np.log(v) for k, v in counts.items()}
+    return {k: (1.0 + np.log(v)) * idf[k] for k, v in counts.items()}
 
 
-def tfidf_cosine(t1: str, t2: str) -> float:
-    """Cosine over hashed log-TF vectors (pair-local; IDF-free by design:
-    at 10^12 docs a global IDF table is a separate broadcast join — the
-    comparator works on log-TF and the logistic weights absorb scale)."""
-    return _weighted_cosine(_tf_vector(t1), _tf_vector(t2))
+def tfidf_cosine(t1: str, t2: str, idf: np.ndarray | None = None) -> float:
+    """Cosine over hashed log-TF vectors. Pair-local (IDF-free) by
+    default: the logistic weights absorb scale. ``idf`` (from
+    :func:`compute_idf`) weights each bucket by corpus rarity — the
+    pipeline's ``use_global_idf`` variant."""
+    return _weighted_cosine(_tf_vector(t1, idf), _tf_vector(t2, idf))
 
 
 @F.pandas_udf(T.DoubleType())
@@ -145,6 +155,23 @@ def tfidf_cosine_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     return pd.Series(
         [tfidf_cosine(a or "", b or "") for a, b in zip(s1, s2)], dtype="float64"
     )
+
+
+def tfidf_cosine_idf_udf(idf: np.ndarray, sc=None):
+    """Pandas-UDF factory: :func:`tfidf_cosine_udf` with corpus IDF
+    weights. Pass the SparkContext so the 512 KB IDF vector ships as a
+    broadcast (once per executor) instead of riding every task."""
+    bcast = sc.broadcast(idf) if sc is not None else None
+
+    @F.pandas_udf(T.DoubleType())
+    def udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
+        w = bcast.value if bcast is not None else idf
+        return pd.Series(
+            [tfidf_cosine(a or "", b or "", w) for a, b in zip(s1, s2)],
+            dtype="float64",
+        )
+
+    return udf
 
 
 def compute_idf(docs, text_col: str = "text") -> np.ndarray:
@@ -192,24 +219,9 @@ def _weighted_cosine(v1: dict[int, float], v2: dict[int, float]) -> float:
     return float(dot / (n1 * n2)) if n1 and n2 else 0.0
 
 
-# ---------------------------------------------------------------------------
-# Doc-major feature kernels (the pipeline's s5 scoring path)
-#
-# The pair-local UDFs above re-tokenize each text once PER PAIR; with
-# blocking fan-out a doc participates in ~10-30 candidate pairs, so the
-# same split/hash work runs that many times, in Python. The kernels
-# below move tokenization to a once-PER-DOC prep step and make the
-# per-pair math pure JVM (collection functions on the prepped arrays/
-# maps) — the only Python left per pair is Jaro-Winkler's char loop.
-# operators/scoring.py composes them; the text-based UDFs stay as the
-# catalog form and the oracle twins (tests assert value equality on
-# corpus pairs).
-# ---------------------------------------------------------------------------
-
-
 def jaccard_from_shingles(sh1, sh2):
-    """|A∩B| / |A∪B| over prepped shingle-hash arrays — pure JVM
-    (array_intersect/array_union), same special cases as
+    """|A∩B| / |A∪B| over shingle-hash arrays (:func:`shingle_hashes_udf`)
+    — pure JVM (array_intersect/array_union), same special cases as
     :func:`token_jaccard`: both empty → 1.0 (nothing else can make the
     union empty)."""
     inter = F.size(F.array_intersect(sh1, sh2))
@@ -219,110 +231,14 @@ def jaccard_from_shingles(sh1, sh2):
     ).otherwise(inter.cast("double") / union)
 
 
-def doc_prep_udf(idf: np.ndarray | None = None, sc=None, width: int = 3):
-    """Pandas-UDF factory: text → struct(sh array<bigint>, idx
-    array<int>, val array<double>) — ONE tokenization pass per
-    document emitting
-
-    * ``sh`` — the distinct word-``width``-shingle set of
-      :func:`token_jaccard`, each shingle replaced by the first 8
-      bytes of its md5 (64-bit, so a within-pair collision is ~1e-12;
-      only set relations matter — both docs of a pair are hashed by
-      this same function);
-    * ``idx``/``val`` — the sparse hashed log-TF vector of
-      :func:`_tf_vector` (× ``idf[bucket]`` when given, the
-      ``use_global_idf`` variant).
-
-    ``sc`` ships the 512 KB IDF vector as a proper broadcast. Per-doc
-    Python here is the whole point: it replaces the same work done
-    once per PAIR by the text UDFs."""
-    bcast = sc.broadcast(idf) if (idf is not None and sc is not None) else None
-    ret = T.StructType(
-        [
-            T.StructField("sh", T.ArrayType(T.LongType())),
-            T.StructField("idx", T.ArrayType(T.IntegerType())),
-            T.StructField("val", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def udf(s: pd.Series) -> pd.DataFrame:
-        w = bcast.value if bcast is not None else idf
-        shs: list[list[int]] = []
-        idxs: list[list[int]] = []
-        vals: list[list[float]] = []
-        for t in s:
-            toks = (t or "").split()
-            shs.append(_shingle_hash_list(toks, width))
-            # hashed log-TF (same buckets/values as _tf_vector)
-            counts: dict[int, int] = {}
-            for tok in toks:
-                h = zlib.crc32(tok.encode("utf-8")) % TF_DIM
-                counts[h] = counts.get(h, 0) + 1
-            ks = sorted(counts)
-            if w is None:
-                vs = [1.0 + float(np.log(counts[k])) for k in ks]
-            else:
-                vs = [(1.0 + float(np.log(counts[k]))) * w[k] for k in ks]
-            idxs.append(ks)
-            vals.append(vs)
-        return pd.DataFrame({"sh": shs, "idx": idxs, "val": vals})
-
-    return udf
-
-
-def _shingle_hash_list(toks: list[str], width: int = 3) -> list[int]:
-    """Distinct word-``width``-shingles of a token list (the set
-    :func:`token_jaccard` builds), each as the first 8 bytes of its
-    md5 — 64-bit, so a within-pair collision is ~1e-12; only set
-    relations matter, and both sides of any pair are hashed by this
-    same function."""
-    import hashlib
-
-    if not toks:
-        sh: set[str] = set()
-    elif len(toks) < width:
-        sh = {" ".join(toks)}
-    else:
-        sh = {" ".join(toks[i : i + width]) for i in range(len(toks) - width + 1)}
-    md5 = hashlib.md5
-    return [
-        int.from_bytes(md5(x.encode("utf-8")).digest()[:8], "little", signed=True)
-        for x in sh
-    ]
-
-
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def shingle_hashes_udf(s: pd.Series) -> pd.Series:
-    """text → shingle-hash set (:func:`_shingle_hash_list`) — the
-    per-DOC half of a doc-major Jaccard refine: pair with
-    :func:`jaccard_from_shingles` on the pair side."""
-    return pd.Series([_shingle_hash_list((t or "").split()) for t in s])
-
-
-def tf_cosine_from_maps(m1, n1, m2, n2):
-    """Cosine over prepped map<int,double> TF vectors with precomputed
-    norms — pure JVM (map_zip_with merge + aggregate dot). Matches
-    :func:`_weighted_cosine`: both empty → 1.0, one empty → 0.0
-    (values differ from the Python twin only in float summation order,
-    ~1e-15 relative)."""
-    prod = F.map_zip_with(m1, m2, lambda _k, a, b: a * b)  # null if unpaired
-    dot = F.aggregate(
-        F.map_values(prod),
-        F.lit(0.0),
-        lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
-    )
-    e1, e2 = F.size(m1) == 0, F.size(m2) == 0
-    # n==0 with a non-empty map is reachable under use_global_idf=True when
-    # every token of a doc is corpus-ubiquitous (df == n_docs → idf 0 for all
-    # buckets).  Without the guard, ANSI mode aborts the job (DIVIDE_BY_ZERO)
-    # and non-ANSI yields NULL — the Python twin returns 0.0.
-    return (
-        F.when(e1 & e2, F.lit(1.0))
-        .when(e1 | e2, F.lit(0.0))
-        .when((n1 * n2) == 0, F.lit(0.0))
-        .otherwise(dot / (n1 * n2))
-    )
+    """text → distinct word-3-shingle hash set, the set
+    :func:`token_jaccard` builds with each shingle as a 64-bit hash
+    (``hashing._shingle_hashes``, the s3 sketches' hasher; a
+    within-pair collision is ~1e-12). The per-DOC half of a Jaccard
+    refine: pair with :func:`jaccard_from_shingles` on the pair side."""
+    return pd.Series([_shingle_hashes(t or "").view(np.int64) for t in s])
 
 
 def cosine_expr(v1, v2):

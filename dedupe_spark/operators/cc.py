@@ -132,13 +132,19 @@ def connected_components(
         out = pd.DataFrame(rows, columns=["node", "cluster_id"])
         return spark.createDataFrame(out, "node long, cluster_id long")
 
-    cur = _truncate(_canon(edges))
     # one bounded collect (Arrow transfer — no per-row Row objects)
     # both answers "small enough?" and fetches the edges when it is;
-    # the fingerprint aggregate runs only for the distributed loop
-    head = cur.limit(driver_finish_edges + 1).toPandas()
+    # the lineage truncation and the fingerprint aggregate run only for
+    # the distributed loop. The canonical edges are cached for that
+    # loop and released on both branches: a localCheckpoint on the
+    # driver-finished branch would stay persisted after the call.
+    canon = _canon(edges).persist()
+    head = canon.limit(driver_finish_edges + 1).toPandas()
     if len(head) <= driver_finish_edges:
+        canon.unpersist()
         return _driver_finish(head)
+    cur = _truncate(canon)
+    canon.unpersist()
     fp = _fingerprint(cur)
     converged = False
     for _ in range(max_iter):

@@ -125,17 +125,23 @@ def prune_cnp(edges: DataFrame, k: int, weight_col: str = "weight") -> DataFrame
     weighted edges of AT LEAST ONE endpoint (the recall-oriented
     redistribution variant).
 
-    Two windows partitioned by endpoint — per-node sorts run in
-    parallel; ties break on the opposite endpoint id so the survivor
-    set is deterministic at any parallelism.
+    Each edge is listed once per endpoint and ranked over that node's
+    whole neighbourhood in one window, so a node keeps at most k edges
+    of its own choosing; ties break on the partner id so the survivor
+    set is deterministic at any parallelism. Edges are unique on
+    (id1, id2).
     """
     if k <= 0:
         raise ValueError(f"prune_cnp: k must be positive, got {k}")
-    w1 = Window.partitionBy("id1").orderBy(F.desc(weight_col), F.asc("id2"))
-    w2 = Window.partitionBy("id2").orderBy(F.desc(weight_col), F.asc("id1"))
-    ranked = edges.withColumn("_cnp_r1", F.row_number().over(w1)).withColumn(
-        "_cnp_r2", F.row_number().over(w2)
+    sym = edges.select(
+        F.col("id1").alias("_cnp_n"), F.col("id2").alias("_cnp_o"), "*"
+    ).unionByName(
+        edges.select(F.col("id2").alias("_cnp_n"), F.col("id1").alias("_cnp_o"), "*")
     )
-    return ranked.where(
-        (F.col("_cnp_r1") <= k) | (F.col("_cnp_r2") <= k)
-    ).drop("_cnp_r1", "_cnp_r2")
+    w = Window.partitionBy("_cnp_n").orderBy(F.desc(weight_col), F.asc("_cnp_o"))
+    return (
+        sym.withColumn("_cnp_r", F.row_number().over(w))
+        .where(F.col("_cnp_r") <= k)
+        .drop("_cnp_n", "_cnp_o", "_cnp_r")
+        .dropDuplicates(["id1", "id2"])
+    )

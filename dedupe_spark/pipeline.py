@@ -39,7 +39,7 @@ from dedupe_spark.operators import scoring
 from dedupe_spark.operators.blocking import block_keys
 from dedupe_spark.operators.cc import assign_all
 from dedupe_spark.operators.extract import extract_docs
-from dedupe_spark.operators.pairs import generate_pairs
+from dedupe_spark.operators.pairs import attach_texts, generate_pairs
 from dedupe_spark.sources.checkpoints import StageIO
 
 log = logging.getLogger(__name__)
@@ -243,12 +243,9 @@ def run_pipeline(
     # compute is the feature UDFs; the affine+sigmoid score is one more
     # column, and a separate commit would double the write of the
     # largest intermediate. Resume-from-here still never recomputes a
-    # scored pair (north_rule). Scoring is doc-major: each
-    # representative is tokenized once (doc_features), Jaccard and
-    # TF-cosine run per pair as JVM collection functions, and
-    # Jaro-Winkler is the only per-pair Python UDF.
-    prep: list[DataFrame] = []
-
+    # scored pair (north_rule). Features are the per-pair text UDFs
+    # (scoring.pair_features), run on the s4 candidates only — the
+    # same s5 as the catalog's q_er_pipeline_clusters.
     def build_scored() -> DataFrame:
         idf = None
         if cfg.use_global_idf:
@@ -258,21 +255,12 @@ def run_pipeline(
             # are drawn from; computed only when s5 actually builds
             # (a resume with s5 committed never pays the corpus pass)
             idf = compute_idf(reps)
-        # persist: pair_features_from_docs joins dfeat on BOTH pair
-        # sides (different join keys — no exchange reuse), so an
-        # unpersisted prep UDF would run twice
-        dfeat = scoring.doc_features(
-            reps.select("doc_id", "text"), idf=idf, sc=spark.sparkContext
-        ).persist()
-        prep.append(dfeat)
-        feats = scoring.pair_features_from_docs(pairs, dfeat)
+        feats = scoring.pair_features(
+            attach_texts(pairs, reps), idf=idf, sc=spark.sparkContext
+        )
         return scoring.score_pairs(feats, cfg.weights, cfg.bias)
 
     scores = stage("s5_scored", build_scored, "s4_pairs")
-    # s5 is always committed and read back, so the prep is spent here,
-    # also when stop_after returns before cleanup()
-    for df in prep:
-        df.unpersist()
     if stop_after == "s5_scored":
         out["_skipped"] = skipped  # type: ignore[assignment]
         return out

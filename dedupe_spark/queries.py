@@ -2384,9 +2384,7 @@ def q_er_pipeline_clusters(spark: SparkSession, sf: str) -> DataFrame:
     # checkpoint-to-scratch, not .persist() — no storage-cache leak
     keys = materialize(block_keys(reps), "er_pipeline_keys")
     pairs, _ = generate_pairs(keys, max_block_size=10_000)
-    # per-pair text UDFs, not the pipeline's doc-major prep: at testdata
-    # scale the per-doc prep pass over every representative does not
-    # amortize (same clusters either way; parity pinned in tests)
+    # the pipeline's s5: per-pair text UDFs on the candidates only
     feats = scoring.pair_features(attach_texts(pairs, reps))
     match = scoring.matches(scoring.score_pairs(feats))
     edges = match.select(F.col("id1").alias("src"), F.col("id2").alias("dst")).unionByName(

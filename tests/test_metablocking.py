@@ -113,6 +113,19 @@ def test_cnp_top_k_either_endpoint(spark):
     assert len(kept) < len(exp)
 
 
+def test_cnp_ranks_whole_neighbourhood(spark):
+    """Top-k is over each node's whole neighbourhood, not per side of
+    the edge: node 2's best edge (k=1, tie → lower partner) is (1,2) and
+    node 3's is (3,4), so (2,3) is nobody's choice and goes. Ranking the
+    id1 side and the id2 side separately kept it as node 2's top id1
+    edge (up to 2k edges per node)."""
+    g = spark.createDataFrame(
+        [(0, 1, 5), (1, 2, 1), (2, 3, 1), (3, 4, 5)], "id1 long, id2 long, weight long"
+    )
+    kept = sorted(map(tuple, prune_cnp(g, k=1).collect()))
+    assert kept == [(0, 1, 5), (1, 2, 1), (3, 4, 5)]
+
+
 def test_cnp_rejects_bad_k(spark):
     import pytest
 

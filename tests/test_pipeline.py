@@ -310,29 +310,49 @@ def test_fast_mode_resume_runs_no_jobs_for_pairs(spark, corpus, tmp_path):
     assert len(after) - len(before) <= 3, (before, after)
 
 
-def test_doc_major_scoring_identical_clusters(spark, corpus, pipe):
-    """The pipeline's doc-major s5 (per-doc prep + JVM pair math) must
-    match exactly the pairs the per-pair text-UDF form matches on the
-    same committed s4 pairs — same features up to float summation order
-    (tests/test_similarity pins the kernels), so no score moves across
-    the threshold on real data."""
+def test_s5_features_match_python_twins(spark, corpus, pipe):
+    """Every committed s5 row equals the pure-Python feature twins on the
+    collected texts: jaro_winkler on 128-char prefixes, token_jaccard,
+    tfidf_cosine, the length ratio, DuckDB levenshtein on 256-char
+    prefixes for lev_ratio — and the score is the comparator over them."""
+    import math
+
+    import duckdb
+    import pandas as pd
+
+    from dedupe_spark.functions.similarity import jaro_winkler, tfidf_cosine, token_jaccard
     from dedupe_spark.operators import scoring
-    from dedupe_spark.operators.pairs import attach_texts
 
     _, out = pipe
-    exact = out["s2_exact"]
-    reps = (
-        exact.where(F.col("doc_id") == F.col("rep_id"))
-        .select("doc_id")
-        .join(out["s1_docs"].select("doc_id", "text"), "doc_id")
+    text = {r["doc_id"]: r["text"] for r in out["s1_docs"].select("doc_id", "text").collect()}
+    rows = out["s5_scored"].collect()
+    assert len(rows) == out["s4_pairs"].count() and len(rows) > 50
+    assert sum(r["score"] >= scoring.DEFAULT_THRESHOLD for r in rows) > 50
+    assert all(t.isascii() for t in text.values())  # DuckDB levenshtein counts bytes
+    pairs = pd.DataFrame(
+        [(r["id1"], r["id2"], text[r["id1"]], text[r["id2"]]) for r in rows],
+        columns=["id1", "id2", "t1", "t2"],
     )
-    ref = scoring.score_pairs(
-        scoring.pair_features(attach_texts(out["s4_pairs"], reps))
-    )
-    got = sorted(map(tuple, scoring.matches(out["s5_scored"]).select("id1", "id2").collect()))
-    want = sorted(map(tuple, scoring.matches(ref).select("id1", "id2").collect()))
-    assert len(got) > 50
-    assert got == want
+    lev = {
+        (a, b): d
+        for a, b, d in duckdb.sql(
+            "select id1, id2, levenshtein(left(t1, 256), left(t2, 256)) from pairs"
+        ).fetchall()
+    }
+    for r in rows:
+        t1, t2 = text[r["id1"]], text[r["id2"]]
+        max_len = max(len(t1[:256]), len(t2[:256]))
+        want = {
+            "jaro_winkler": jaro_winkler(t1[:128], t2[:128]),
+            "lev_ratio": 1.0 - lev[(r["id1"], r["id2"])] / max_len if max_len else 1.0,
+            "jaccard3": token_jaccard(t1, t2),
+            "tf_cosine": tfidf_cosine(t1, t2),
+            "len_ratio": min(len(t1), len(t2)) / max(len(t1), len(t2)) if t1 or t2 else 1.0,
+        }
+        for name, w in want.items():
+            assert abs(r[name] - w) <= 1e-12, (name, r, w)
+        z = scoring.DEFAULT_BIAS + sum(scoring.DEFAULT_WEIGHTS[k] * w for k, w in want.items())
+        assert abs(r["score"] - 1.0 / (1.0 + math.exp(-z))) <= 1e-12
 
 
 def test_s5_build_runs_no_path_gate_job(spark, corpus, tmp_path):
@@ -398,3 +418,12 @@ def test_capped_blocks_warn_through_logging(spark, corpus, tmp_path, caplog, cap
     assert len(capped) == 1 and capped[0].levelno == logging.WARNING
     assert int(capped[0].getMessage().split()[0]) > 0
     assert "capped" not in capsys.readouterr().out
+
+
+def test_full_run_leaves_no_persisted_rdd(spark, corpus, tmp_path):
+    """A full run releases everything it persisted, including the edge
+    cache of the driver-finished connected-components call."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    run_pipeline(spark, corpus, str(tmp_path / "leak"))
+    assert jsc.getPersistentRDDs().size() == before

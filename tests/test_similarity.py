@@ -136,15 +136,15 @@ def test_global_tfidf_cosine_matches_hand_oracle(spark):
         n2 = np.sqrt(sum(w * w for w in v2.values()))
         return dot / (n1 * n2)
 
-    # doc-major: the IDF-weighted TF vectors are prepped once per doc,
-    # the cosine runs per pair in the JVM (the pipeline's s5 path)
+    # the pipeline's use_global_idf path: pair_features(…, idf=…)
+    from dedupe_spark.operators.pairs import attach_texts
+
     ids = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    dfeat = scoring.doc_features(ids, idf=idf, sc=spark.sparkContext)
     pairs = spark.createDataFrame([(0, 1), (0, 2), (0, 0)], "id1 long, id2 long")
-    by_id2 = {
-        r["id2"]: r["tf_cosine"]
-        for r in scoring.pair_features_from_docs(pairs, dfeat).collect()
-    }
+    feats = scoring.pair_features(
+        attach_texts(pairs, ids), idf=idf, sc=spark.sparkContext
+    )
+    by_id2 = {r["id2"]: r["tf_cosine"] for r in feats.collect()}
     got = [by_id2[1], by_id2[2], by_id2[0]]
     want = [hand_cos(texts[0], texts[1]), hand_cos(texts[0], texts[2]), 1.0]
     assert np.allclose(got, want, atol=1e-12), (got, want)
@@ -223,12 +223,16 @@ def test_jaro_winkler_indexed_scan_equals_naive_window_scan():
             assert jaro_winkler(a, b) == jw_naive(a, b), (a, b)
 
 
-def test_doc_major_kernels_match_pair_udfs(spark):
-    """JVM shingle-Jaccard and map-cosine kernels vs the per-pair text
-    UDF twins, on corpus texts + edge cases: jaccard bit-equal (barring
-    a 64-bit hash collision), tf_cosine equal up to summation order."""
+def test_shingle_hash_jaccard_matches_token_jaccard_udf(spark):
+    """Curation's JVM shingle-Jaccard (jaccard_from_shingles over
+    shingle_hashes_udf) vs the per-pair text UDF twin, on corpus texts
+    + edge cases: bit-equal (barring a 64-bit shingle-hash collision)."""
     from dedupe_spark.corpus import generate_pages
-    from dedupe_spark.operators import scoring
+    from dedupe_spark.functions.similarity import (
+        jaccard_from_shingles,
+        shingle_hashes_udf,
+        token_jaccard_udf,
+    )
     from dedupe_spark.operators.extract import extract_docs
     from dedupe_spark.operators.pairs import attach_texts
 
@@ -251,50 +255,49 @@ def test_doc_major_kernels_match_pair_udfs(spark):
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
         # deterministic 1-in-7 thinning (sample() re-draws per plan
-        # branch — the two feature paths would see different pair sets)
+        # branch — the two sides would see different pair sets)
         .where(F.pmod(F.xxhash64("id1", "id2"), F.lit(7)) == 0)
     )
-    old = scoring.pair_features(attach_texts(pairs, docs))
-    new = scoring.pair_features_from_docs(pairs, scoring.doc_features(docs))
+    old = attach_texts(pairs, docs).select(
+        "id1", "id2", token_jaccard_udf("text1", "text2").alias("jac")
+    )
+    sh = docs.select("doc_id", shingle_hashes_udf("text").alias("sh"))
+    new = attach_texts(pairs, sh.withColumnRenamed("sh", "text")).select(
+        "id1", "id2", jaccard_from_shingles(F.col("text1"), F.col("text2")).alias("jac")
+    )
     diffs = (
         old.alias("o")
         .join(new.alias("n"), ["id1", "id2"])
         .agg(
-            F.max(F.abs(F.col("o.jaro_winkler") - F.col("n.jaro_winkler"))).alias("jw"),
-            F.max(F.abs(F.col("o.lev_ratio") - F.col("n.lev_ratio"))).alias("lev"),
-            F.max(F.abs(F.col("o.jaccard3") - F.col("n.jaccard3"))).alias("jac"),
-            F.max(F.abs(F.col("o.tf_cosine") - F.col("n.tf_cosine"))).alias("tf"),
-            F.max(F.abs(F.col("o.len_ratio") - F.col("n.len_ratio"))).alias("len"),
+            F.max(F.abs(F.col("o.jac") - F.col("n.jac"))).alias("jac"),
             F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("o.jac") > 0, 1)).alias("n_overlap"),
         )
         .collect()[0]
     )
-    assert diffs["n"] > 500
-    assert diffs["jw"] == 0.0
-    assert diffs["lev"] == 0.0
+    assert diffs["n"] > 500 and diffs["n_overlap"] > 0
     assert diffs["jac"] == 0.0
-    assert diffs["len"] == 0.0
-    assert diffs["tf"] < 1e-12
 
 
 def test_tf_cosine_zero_norm_guard(spark):
     """An idf-zeroed doc (every token corpus-ubiquitous → idf 0 for all
-    its buckets) has a NON-empty tf_map with tf_norm = 0. The JVM kernel
-    must return 0.0 like the Python twin — without the guard, ANSI mode
-    aborts the job with DIVIDE_BY_ZERO (ADVICE r4)."""
+    its buckets) has a NON-empty TF vector with norm 0. The cosine must
+    return 0.0 rather than divide by zero (ADVICE r4)."""
     import numpy as np
 
-    from dedupe_spark.functions.similarity import TF_DIM
+    from dedupe_spark.functions.similarity import TF_DIM, _tf_vector
     from dedupe_spark.operators import scoring
+    from dedupe_spark.operators.pairs import attach_texts
 
     docs = spark.createDataFrame(
         [(1, "the quick brown fox"), (2, "the quick brown fox jumps")],
         "doc_id long, text string",
     )
     zero_idf = np.zeros(TF_DIM)
-    dfeat = scoring.doc_features(docs, idf=zero_idf, sc=spark.sparkContext)
-    rows = {r["doc_id"]: r for r in dfeat.collect()}
-    assert len(rows[1]["tf_map"]) > 0 and rows[1]["tf_norm"] == 0.0  # the trap
+    vec = _tf_vector("the quick brown fox", zero_idf)
+    assert len(vec) > 0 and not any(vec.values())  # the trap
     pairs = spark.createDataFrame([(1, 2)], "id1 long, id2 long")
-    got = scoring.pair_features_from_docs(pairs, dfeat).collect()[0]
-    assert got["tf_cosine"] == 0.0  # Python twin _weighted_cosine returns 0.0
+    got = scoring.pair_features(
+        attach_texts(pairs, docs), idf=zero_idf, sc=spark.sparkContext
+    ).collect()[0]
+    assert got["tf_cosine"] == 0.0
