@@ -5,33 +5,34 @@ linkage flow the reference's fixed md5-equality pipeline cannot
 express:
 
   blocking keys → candidate pairs (skew-split, optional CNP prune)
-  → binary agreement vectors → u from pseudo-random pairs → (m, u, λ)
-  by EM → Fellegi–Sunter posterior scores → threshold → transitive
-  closure → golden records.
+  → binary agreement vectors; exact u from value frequencies seeds
+  EM → (m, u, λ) → Fellegi–Sunter posterior scores → threshold →
+  transitive closure → golden records.
 
 Every stage is the already-tested operator (pairs.generate_pairs,
 metablocking.prune_cnp, fs.*, cc.assign_all,
 survivorship.golden_records); this module only wires them. Scale
 notes live with each operator. The (id1, id2, agree_*) table is built
 once and lineage-truncated (localCheckpoint), then feeds both EM and
-scoring; the only collect here is EM's agreement-pattern histogram
-(at most 3^K rows for K comparisons).
+scoring; it stays persisted until ``LinkageResult.release()``. The
+collects here are EM's agreement-pattern histogram (at most 3^K rows
+for K comparisons) and K value-frequency sums.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dedupe_spark.operators.cc import assign_all
+from dedupe_spark.operators.cc import assign_all, release_checkpoint
 from dedupe_spark.operators.fs import (
+    EM_MAX_ROUNDS,
     FSFeature,
     estimate_m_u_em,
-    estimate_u,
+    frequency_u,
     fs_score,
-    random_pairs,
 )
 from dedupe_spark.operators.pairs import generate_pairs
 
@@ -46,8 +47,7 @@ class LinkageConfig:
     # so 0.9 silently links nothing. Raise it when several strong
     # comparisons survive.
     threshold: float = 0.85
-    em_iters: int = 15
-    seed: int = 0                   # u-estimation pairing seed
+    em_iters: int = EM_MAX_ROUNDS   # cap; EM stops once its estimates settle
     cnp_k: int | None = None        # optional meta-blocking prune
     hot_threshold: int = 1000
     salt_buckets: int = 16
@@ -63,6 +63,15 @@ class LinkageResult:
     u: dict[str, float]
     lam: float
     dropped_features: list[str]     # EM found them uninformative (m <= u)
+    em_rounds: int
+    em_converged: bool              # False: EM hit the em_iters cap
+    _pair_feats: DataFrame = field(repr=False)
+
+    def release(self) -> None:
+        """Unpersist the lineage-truncated agreement table. ``scored``
+        reads it (``clusters`` does not), so call this once ``scored``
+        is written or no longer needed."""
+        release_checkpoint(self._pair_feats)
 
 
 def _agreements(pairs: DataFrame, records: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
@@ -117,20 +126,13 @@ def link_records(
         eager=True
     )
 
-    # u from pseudo-random (almost surely non-matching) pairs seeds EM
-    # on the right side of the mixture; EM then refines both classes
-    # on the candidate pairs themselves.
-    rp = random_pairs(records.select(id_col, *config.compare_cols), id_col, seed=config.seed)
-    rp_feats = rp.select(
-        *[
-            F.col(f"{c}_1").eqNullSafe(F.col(f"{c}_2")).alias(f"agree_{c}")
-            for c in config.compare_cols
-        ]
-    )
-    u0 = estimate_u(rp_feats, agree_cols)
+    # exact u (value frequencies over the records) seeds EM on the
+    # right side of the mixture; EM then refines both classes on the
+    # candidate pairs themselves
+    u0 = frequency_u(records, config.compare_cols)
     u0 = {c: min(1 - config.eps, max(config.eps, v)) for c, v in u0.items()}
 
-    m, u, lam = estimate_m_u_em(
+    m, u, lam, em_rounds, em_converged = estimate_m_u_em(
         pair_feats,
         agree_cols,
         n_iter=config.em_iters,
@@ -148,6 +150,7 @@ def link_records(
             continue
         features.append(FSFeature(c, m=m[ac], u=u[ac]))
     if not features:
+        release_checkpoint(pair_feats)
         raise ValueError(
             "link_records: EM found no informative comparison "
             f"(m <= u for all of {config.compare_cols}) — the blocking "
@@ -169,4 +172,7 @@ def link_records(
         u=u,
         lam=lam,
         dropped_features=dropped,
+        em_rounds=em_rounds,
+        em_converged=em_converged,
+        _pair_feats=pair_feats,
     )

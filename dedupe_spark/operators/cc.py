@@ -75,6 +75,13 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` result, which
+    ``DataFrame.unpersist`` leaves: they belong to the RDD under its
+    LogicalRDD, not to the cache manager."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _driver_union_find(edge_rows: list[tuple[int, int]]):
     """Min-root union-find over a collected edge list."""
     parent: dict[int, int] = {}
@@ -149,17 +156,21 @@ def connected_components(
     converged = False
     for _ in range(max_iter):
         nxt = _truncate(_small_star(_large_star(cur)))
-        nfp = _fingerprint(nxt)
+        release_checkpoint(cur)  # nxt is materialized without it
         cur = nxt
+        nfp = _fingerprint(cur)
         if nfp == fp:
             converged = True
             break
         fp = nfp
         if fp[0] <= driver_finish_edges:
-            return _driver_finish(cur.toPandas())
+            tail = cur.toPandas()
+            release_checkpoint(cur)
+            return _driver_finish(tail)
     if not converged:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    # Converged: every edge is (node, component_min).
+    # Converged: every edge is (node, component_min). The returned
+    # frame reads this last round, so it alone stays persisted.
     members = cur.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
     roots = cur.select(F.col("dst").alias("node"), F.col("dst").alias("cluster_id")).distinct()
     return members.unionByName(roots).distinct()

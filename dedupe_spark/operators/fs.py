@@ -11,16 +11,15 @@ posterior match probability. This is the model behind Splink and most
 production linkage engines.
 
 Parameter estimation, both standard practice:
-  * ``estimate_u`` — u-probabilities from deterministic pseudo-random
-    pairs (hash-rank adjacent pairing): at web scale a random pair is
-    almost surely a non-match, so agreement rates on random pairs
-    estimate u directly.
+  * ``frequency_u`` — exact u from value frequencies, the reference's
+    per-value count (Dedupe.java's length facet) on every column.
   * ``estimate_m_u_em`` — unsupervised EM over binary agreement
     vectors (the classic two-class latent mixture). A pair's match
     responsibility depends only on its agreement pattern, so EM runs
     on the pattern histogram (the fastLink design, Enamorado, Fifield
     & Imai, APSR 2019): ONE Spark aggregate in total, then every
-    iteration in numpy on the driver.
+    iteration in numpy on the driver, until no parameter moves by
+    ``EM_TOL`` or the round cap is hit.
 
 Scale notes (north_rule):
   * scoring is a pure JVM projection over the candidate-pair table —
@@ -29,9 +28,8 @@ Scale notes (north_rule):
   * EM never collects pair data: the pattern histogram has at most
     2^K rows (3^K with NULLs; K = number of comparisons), whatever
     the pair count, and the iteration count adds no Spark job;
-  * ``random_pairs`` reuses ``snm.distributed_rank`` — no global
-    single-task sort, no RNG (xxhash64 of the id ⇒ identical pairing
-    at any parallelism);
+  * ``frequency_u`` shuffles one row per (column, value) and brings K
+    rows to the driver — no pairs, no sort, no RNG;
   * the weight/prob expressions have SQL twins generated from the SAME
     feature table (the pii.py single-source design) so engine dialects
     cannot drift.
@@ -39,15 +37,23 @@ Scale notes (north_rule):
 
 from __future__ import annotations
 
+import logging
 import math
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dedupe_spark.operators.snm import distributed_rank
+log = logging.getLogger(__name__)
+
+# EM stops once no m, u or λ moves by EM_TOL in a round. A round is
+# numpy over the pattern histogram (<1 ms), so the cap only guards
+# against a crawl: 6k planted records need 700-2,200 rounds.
+EM_TOL = 1e-8
+EM_MAX_ROUNDS = 5_000
 
 
 @dataclass(frozen=True)
@@ -186,68 +192,64 @@ def decision_sql(lower: float, upper: float, prob_expr: str) -> str:
     )
 
 
-def random_pairs(
-    df: DataFrame, id_col: str, seed: int = 0, n_buckets: int = 1024
-) -> DataFrame:
-    """Deterministic pseudo-random disjoint pairing: rank rows by
-    xxhash64(id, seed) (ties impossible — the rank tiebreak is the
-    unique id) and pair rank 2i-1 with rank 2i. Columns come back
-    suffixed _1/_2; an odd trailing row is dropped. No RNG state —
-    identical pairing at any parallelism, any partitioning."""
-    ranked = distributed_rank(
-        df.withColumn("_fs_h", F.xxhash64(F.col(id_col), F.lit(seed))),
-        "_fs_h",
-        id_col,
-        rank_col="_fs_rank",
-        n_buckets=n_buckets,
-    ).drop("_fs_h")
-    pid = F.expr("(_fs_rank - 1) div 2")
-    side = F.pmod(F.col("_fs_rank") - 1, F.lit(2))
-    tagged = ranked.withColumn("_fs_pid", pid).withColumn("_fs_side", side)
-    cols = [c for c in df.columns if c != "_fs_h"]
-    a = tagged.where(F.col("_fs_side") == 0).select(
-        "_fs_pid", *[F.col(c).alias(f"{c}_1") for c in cols]
+def frequency_u(records: DataFrame, cols: list[str]) -> dict[str, float]:
+    """Exact u per column, the share of pairs of distinct records that
+    agree: Σ_v n_v(n_v−1) / (N(N−1)) over the column's value counts n_v.
+    One GROUPING SETS ((c1), …, (cK)) aggregate counts every (column,
+    value) in one shuffle, on native values, so the groups are the
+    ``eqNullSafe`` classes: NULL is one value and -0.0 equals 0.0 (a
+    string cast would split them)."""
+    k = len(cols)
+    # grouping_id sets bit k-1-j for each column j outside the set
+    col_of = {(1 << k) - 1 - (1 << (k - 1 - j)): c for j, c in enumerate(cols)}
+    n = F.col("_n").cast("decimal(38,0)")
+    rows = (
+        records.groupingSets([[c] for c in cols], *cols)
+        .agg(F.grouping_id().alias("_g"), F.count(F.lit(1)).alias("_n"))
+        .groupBy("_g")
+        .agg(F.sum(n * (n - 1)).alias("_same"), F.sum(n).alias("_total"))
+        .collect()
     )
-    b = tagged.where(F.col("_fs_side") == 1).select(
-        "_fs_pid", *[F.col(c).alias(f"{c}_2") for c in cols]
-    )
-    return a.join(b, "_fs_pid").drop("_fs_pid")
+    got = {col_of[r["_g"]]: (int(r["_same"]), int(r["_total"])) for r in rows}
+    total = got[cols[0]][1] if got else 0
+    if total < 2:
+        raise ValueError("frequency_u: u needs at least two records")
+    return {c: got[c][0] / (total * (total - 1)) for c in cols}
 
 
-def estimate_u(pairs: DataFrame, agree_cols: list[str]) -> dict[str, float]:
-    """u_k = mean agreement over (pseudo-random, almost-surely
-    non-matching) pairs — one aggregate, K scalars to the driver."""
-    row = pairs.agg(
-        *[F.avg(F.col(c).cast("double")).alias(c) for c in agree_cols]
-    ).first()
-    if row is None or any(row[c] is None for c in agree_cols):
-        raise ValueError("estimate_u: empty pair table")
-    return {c: float(row[c]) for c in agree_cols}
+class EMFit(NamedTuple):
+    m: dict[str, float]
+    u: dict[str, float]
+    lam: float
+    rounds: int
+    converged: bool         # False: stopped by the round cap
 
 
 def estimate_m_u_em(
     pairs: DataFrame,
     agree_cols: list[str],
-    n_iter: int = 20,
+    n_iter: int = EM_MAX_ROUNDS,
     init_m: float = 0.9,
     init_u: float = 0.1,
     init_lambda: float = 0.1,
     eps: float = 1e-6,
-) -> tuple[dict[str, float], dict[str, float], float]:
+) -> EMFit:
     """Unsupervised EM for (m, u, λ) over binary agreement vectors.
 
     E-step: r = λ·Π m^γ(1-m)^(1-γ) / (that + (1-λ)·Π u^γ(1-u)^(1-γ)).
     M-step: m_k = Σ r·γ_k / Σ r, u_k = Σ (1-r)·γ_k / Σ (1-r),
     λ = Σ r / n. Parameters are clamped to [eps, 1-eps] so a
-    degenerate corpus can't zero a likelihood.
+    degenerate corpus can't zero a likelihood. EM stops when the
+    largest change of any m, u or λ in a round is below ``EM_TOL``;
+    ``n_iter`` caps the rounds, and hitting the cap logs a warning.
 
     r depends on a pair only through its agreement pattern, so every
     sum above is a count-weighted sum over the DISTINCT patterns
     (fastLink, Enamorado, Fifield & Imai, APSR 2019): one
     ``groupBy(agree_*).count()`` — at most 2^K rows, 3^K with NULLs —
-    is the only Spark job, and all ``n_iter`` rounds run in numpy on
-    the driver. A NULL agreement counts as disagreement in the E-step
-    and adds nothing in the M-step.
+    is the only Spark job, and every round runs in numpy on the
+    driver. A NULL agreement counts as disagreement in the E-step and
+    adds nothing in the M-step.
 
     Identifiability caveat (standard for this model): with fewer than
     3 comparisons the binary mixture has more parameters than
@@ -271,18 +273,13 @@ def estimate_m_u_em(
     weight = np.nan_to_num(gamma, nan=0.0)
     n = float(cnt.sum())
 
-    def clamp(x: float) -> float:
-        return min(1.0 - eps, max(eps, x))
-
-    m = {c: init_m for c in agree_cols}
-    u = {c: init_u for c in agree_cols}
+    m = np.full(len(agree_cols), init_m)
+    u = np.full(len(agree_cols), init_u)
     lam = init_lambda
-    for _ in range(n_iter):
-        num = np.full(len(hist), lam)
-        den = np.full(len(hist), 1.0 - lam)
-        for j, c in enumerate(agree_cols):
-            num = num * np.where(agree[:, j], m[c], 1.0 - m[c])
-            den = den * np.where(agree[:, j], u[c], 1.0 - u[c])
+    rounds, converged = 0, False
+    while rounds < n_iter:
+        num = lam * np.where(agree, m, 1.0 - m).prod(axis=1)
+        den = (1.0 - lam) * np.where(agree, u, 1.0 - u).prod(axis=1)
         # double underflow guard: with many features the two products
         # can BOTH underflow to 0.0 (num+den == 0 → 0/0 → NaN poisons
         # every sum); an uninformative 0.5 keeps EM moving
@@ -290,12 +287,22 @@ def estimate_m_u_em(
         with np.errstate(invalid="ignore"):
             r = np.where(tot == 0.0, 0.5, num / tot)
         cr = cnt * r
-        cnr = cnt * (1.0 - r)
         sr = float(cr.sum())
         snr = n - sr
         if sr <= 0.0 or snr <= 0.0:
-            break  # all mass on one class — nothing left to estimate
-        m = {c: clamp(float(cr @ weight[:, j]) / sr) for j, c in enumerate(agree_cols)}
-        u = {c: clamp(float(cnr @ weight[:, j]) / snr) for j, c in enumerate(agree_cols)}
-        lam = clamp(sr / n)
-    return m, u, lam
+            converged = True  # all mass on one class: a fixed point
+            break
+        new_m = np.clip(cr @ weight / sr, eps, 1.0 - eps)
+        new_u = np.clip((cnt * (1.0 - r)) @ weight / snr, eps, 1.0 - eps)
+        new_lam = min(1.0 - eps, max(eps, sr / n))
+        step = max(abs(new_lam - lam), np.abs(new_m - m).max(), np.abs(new_u - u).max())
+        m, u, lam = new_m, new_u, new_lam
+        rounds += 1
+        if step < EM_TOL:
+            converged = True
+            break
+    if not converged:
+        log.warning("estimate_m_u_em: hit the cap of %d rounds before the "
+                    "estimates settled to %g; they depend on the cap", n_iter, EM_TOL)
+    m, u = dict(zip(agree_cols, m.tolist())), dict(zip(agree_cols, u.tolist()))
+    return EMFit(m, u, float(lam), rounds, converged)

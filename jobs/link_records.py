@@ -8,7 +8,8 @@ Input schema: (doc_id long, text string, lang string, source string,
 n_chars long) — extra columns ride along into the golden records.
 Output: <output>/clusters (doc_id, cluster_id), <output>/golden (one
 consolidated row per cluster), and one JSON stats line on stdout
-(EM-estimated m/u/λ, cluster counts, dropped comparisons).
+(EM-estimated m/u/λ and EM rounds, cluster counts, dropped
+comparisons).
 
 Comparisons are derived, not configured by schema: lang and source
 agreement, a 16-char length bucket, and the token-set fingerprint —
@@ -35,7 +36,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--threshold", type=float, default=0.85,
                    help="posterior P(match) cut for an edge (see "
                         "LinkageConfig.threshold for why not 0.9)")
-    p.add_argument("--em-iters", type=int, default=15)
     p.add_argument("--cnp-k", type=int, default=None,
                    help="optional meta-blocking cardinality-node-pruning k")
     p.add_argument("--cores", type=int, default=None)
@@ -68,7 +68,6 @@ def main(argv: list[str] | None = None) -> None:
     cfg = LinkageConfig(
         compare_cols=["lang", "source", "lenb", "fp"],
         threshold=args.threshold,
-        em_iters=args.em_iters,
         cnp_k=args.cnp_k,
     )
     res = link_records(records, keys, cfg)
@@ -83,6 +82,7 @@ def main(argv: list[str] | None = None) -> None:
 
     res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
     golden.drop("fp", "lenb").write.mode("overwrite").parquet(f"{args.output}/golden")
+    res.release()
 
     n_docs = records.count()
     n_golden = spark.read.parquet(f"{args.output}/golden").count()
@@ -98,6 +98,8 @@ def main(argv: list[str] | None = None) -> None:
         "m": res.m,
         "u": res.u,
         "dropped_comparisons": res.dropped_features,
+        "em_rounds": res.em_rounds,
+        "em_converged": res.em_converged,
         "wall_sec": round(time.time() - t0, 1),
     }))
 

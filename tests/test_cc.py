@@ -141,3 +141,15 @@ def test_cc_driver_finish_threshold(spark, monkeypatch, driver_finish_edges, loo
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 5)]
     _run(spark, edges, driver_finish_edges=driver_finish_edges)
     assert bool(calls) == loop
+
+
+def test_distributed_rounds_release_superseded_checkpoints(spark):
+    """Each distributed round's localCheckpoint is released once the
+    next round is materialized: a 250-edge chain (several rounds) leaves at
+    most the last round persisted, the one the returned frame reads."""
+    jsc = spark.sparkContext._jsc
+    df = spark.createDataFrame([(i, i + 1) for i in range(250)], "src long, dst long")
+    before = jsc.getPersistentRDDs().size()
+    out = connected_components(df, driver_finish_edges=0).collect()
+    assert len(out) == 251 and {r["cluster_id"] for r in out} == {0}
+    assert jsc.getPersistentRDDs().size() <= before + 1

@@ -1,10 +1,12 @@
 """Fellegi–Sunter: weights/probabilities against a pure-Python oracle,
-parameter validation, deterministic random pairing, u-estimation
-against the analytic value, EM recovery of planted parameters, and the
-histogram EM against the per-round aggregate formulation."""
+parameter validation, frequency u against an all-pairs brute force and
+the analytic value, EM recovery of planted parameters, EM's stopping
+rule, and the histogram EM against the per-round aggregate
+formulation."""
 
 from __future__ import annotations
 
+import logging
 import math
 import random
 
@@ -12,11 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark.operators.fs import (
+    EM_TOL,
     FSFeature,
     estimate_m_u_em,
-    estimate_u,
+    frequency_u,
     fs_score,
-    random_pairs,
 )
 
 FEATS = [FSFeature("a", m=0.9, u=0.2), FSFeature("b", m=0.8, u=0.05)]
@@ -62,44 +64,58 @@ def test_prior_validation(spark):
         fs_score(df, FEATS, prior=0.0)
 
 
-def test_random_pairs_disjoint_and_deterministic(spark):
-    docs = spark.createDataFrame([(i, f"s{i % 3}") for i in range(101)], "doc_id long, source string")
-    p1 = random_pairs(docs, "doc_id", seed=5)
-    rows = p1.collect()
-    assert len(rows) == 50  # odd trailing row dropped
-    used = [r["doc_id_1"] for r in rows] + [r["doc_id_2"] for r in rows]
-    assert len(used) == len(set(used))  # disjoint pairing
-    p2 = sorted(
-        (r["doc_id_1"], r["doc_id_2"])
-        for r in random_pairs(docs.repartition(16), "doc_id", seed=5).collect()
+def _brute_force_u(df, cols):
+    """Mean eqNullSafe agreement over every ordered pair of distinct rows."""
+    a = df.select(*[F.col(c).alias(f"{c}_1") for c in ["_i", *cols]])
+    b = df.select(*[F.col(c).alias(f"{c}_2") for c in ["_i", *cols]])
+    row = (
+        a.crossJoin(b)
+        .where(F.col("_i_1") != F.col("_i_2"))
+        .agg(*[F.avg(F.col(f"{c}_1").eqNullSafe(F.col(f"{c}_2")).cast("double")).alias(c) for c in cols])
+        .first()
     )
-    assert p2 == sorted((r["doc_id_1"], r["doc_id_2"]) for r in rows)
-    # a different seed pairs differently
-    p3 = sorted(
-        (r["doc_id_1"], r["doc_id_2"])
-        for r in random_pairs(docs, "doc_id", seed=6).collect()
-    )
-    assert p3 != p2
+    return {c: row[c] for c in cols}
 
 
-def test_estimate_u_matches_analytic(spark):
-    # langs drawn 50/30/20: P(random agree) = .5^2+.3^2+.2^2 = 0.38
+def test_frequency_u_matches_all_pairs_brute_force(spark):
+    """NULL is one value (NULL <=> NULL agrees) and -0.0 equals 0.0, as
+    in eqNullSafe; a string cast of the double column would split the
+    zeros and miss this."""
+    rng = random.Random(7)
+    rows = [
+        (
+            i,
+            rng.choice(["en", "de", None]),
+            rng.choice([0.0, -0.0, 1.5, None]),
+            rng.choice([1, 2, 3, 4, None]),
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "_i long, lang string, x double, k long")
+    assert {str(r[2]) for r in rows} >= {"0.0", "-0.0", "None"}
+    cols = ["lang", "x", "k"]
+    got = frequency_u(df, cols)
+    want = _brute_force_u(df, cols)
+    for c in cols:
+        assert got[c] == pytest.approx(want[c], rel=1e-12)
+
+
+def test_frequency_u_matches_analytic(spark):
+    # langs drawn 50/30/20: P(two records agree) = .5^2+.3^2+.2^2 = 0.38
     rng = random.Random(13)
     langs = ["en"] * 50 + ["de"] * 30 + ["fr"] * 20
     docs = spark.createDataFrame(
         [(i, rng.choice(langs)) for i in range(4000)], "doc_id long, lang string"
     )
-    pairs = random_pairs(docs, "doc_id", seed=1).select(
-        (F.col("lang_1") == F.col("lang_2")).alias("agree_lang")
-    )
-    u = estimate_u(pairs, ["agree_lang"])
-    assert u["agree_lang"] == pytest.approx(0.38, abs=0.04)
+    assert frequency_u(docs, ["lang"])["lang"] == pytest.approx(0.38, abs=0.04)
 
 
-def test_estimate_u_empty_raises(spark):
-    df = spark.createDataFrame([], "agree_a boolean")
+def test_frequency_u_needs_two_records(spark):
+    df = spark.createDataFrame([("a",)], "a string")
     with pytest.raises(ValueError):
-        estimate_u(df, ["agree_a"])
+        frequency_u(df, ["a"])
+    with pytest.raises(ValueError):
+        frequency_u(df.where(F.lit(False)), ["a"])
 
 
 def _planted_pairs(spark, n=6000, lam=0.2, seed=29):
@@ -131,7 +147,7 @@ def _planted_pairs(spark, n=6000, lam=0.2, seed=29):
 def test_em_recovers_planted_parameters(spark):
     df, m_true, u_true = _planted_pairs(spark)
     cols = ["agree_a", "agree_b", "agree_c"]
-    m, u, lam = estimate_m_u_em(df.select(*cols), cols, n_iter=40)
+    m, u, lam, _, _ = estimate_m_u_em(df.select(*cols), cols, n_iter=40)
     for c, key in (("agree_a", "a"), ("agree_b", "b"), ("agree_c", "c")):
         assert m[c] == pytest.approx(m_true[key], abs=0.08)
         assert u[c] == pytest.approx(u_true[key], abs=0.05)
@@ -216,7 +232,7 @@ def _em_per_round(pairs, agree_cols, n_iter, init_m=0.9, init_u=0.1, init_lambda
 
 
 def _assert_same_params(got, want):
-    (m, u, lam), (m0, u0, lam0) = got, want
+    (m, u, lam, _, _), (m0, u0, lam0) = got, want
     assert m.keys() == m0.keys() and u.keys() == u0.keys()
     for c in m0:
         assert m[c] == pytest.approx(m0[c], rel=1e-9)
@@ -268,3 +284,42 @@ def test_em_spark_jobs_independent_of_iterations(spark):
 
     n5 = jobs(5)
     assert n5 >= 1 and n5 == jobs(40)
+
+
+def test_em_stops_at_tolerance_on_planted_pairs(spark, monkeypatch):
+    """EM stops at the first round whose largest parameter change is
+    below EM_TOL, reports that round, and reads as converged; one round
+    less of cap is not converged. The converged estimate is near the
+    fixed point a much tighter tolerance reaches."""
+    df, _, _ = _planted_pairs(spark)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    df = df.select(*cols).localCheckpoint(eager=True)
+    fit = estimate_m_u_em(df, cols, n_iter=1000)
+    assert fit.converged and 1 < fit.rounds < 1000
+    again = estimate_m_u_em(df, cols, n_iter=fit.rounds)
+    assert again.converged and again.rounds == fit.rounds
+    _assert_same_params(again, fit[:3])
+    short = estimate_m_u_em(df, cols, n_iter=fit.rounds - 1)
+    assert not short.converged and short.rounds == fit.rounds - 1
+    monkeypatch.setattr("dedupe_spark.operators.fs.EM_TOL", EM_TOL * 1e-4)
+    tight = estimate_m_u_em(df, cols, n_iter=1000)
+    assert tight.converged and tight.rounds > fit.rounds
+    for c in cols:
+        assert fit.m[c] == pytest.approx(tight.m[c], abs=1e-5)
+        assert fit.u[c] == pytest.approx(tight.u[c], abs=1e-5)
+    assert fit.lam == pytest.approx(tight.lam, abs=1e-5)
+
+
+def test_em_cap_logs_warning(spark, caplog):
+    df, _, _ = _planted_pairs(spark, n=2000)
+    cols = ["agree_a", "agree_b", "agree_c"]
+    with caplog.at_level(logging.WARNING, logger="dedupe_spark.operators.fs"):
+        capped = estimate_m_u_em(df, cols, n_iter=3)
+    assert not capped.converged and capped.rounds == 3
+    warned = [r for r in caplog.records if r.name == "dedupe_spark.operators.fs"]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "cap of 3 rounds" in warned[0].getMessage()
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="dedupe_spark.operators.fs"):
+        assert estimate_m_u_em(df, cols).converged
+    assert not [r for r in caplog.records if r.name == "dedupe_spark.operators.fs"]

@@ -94,6 +94,23 @@ def test_linkage_validation(spark):
         link_records(records, _keys(records), LinkageConfig(compare_cols=[]))
 
 
+def test_release_frees_the_agreement_checkpoint(spark):
+    """Two link_records calls, each released after its clusters are
+    read, leave the persisted-RDD count where it started (at most: the
+    JVM's ContextCleaner may free other tests' leftovers meanwhile)."""
+    records, _ = _planted(spark)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        res = link_records(
+            records, _keys(records), LinkageConfig(compare_cols=["lang", "source", "fpx"])
+        )
+        assert res.em_converged and 0 < res.em_rounds < LinkageConfig().em_iters
+        res.clusters.collect()
+        res.release()
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_link_records_job_on_testdata(spark, tmp_path):
     """The CLI composition on the fixed sf0.01 documents table must
     recover the token-fingerprint duplicate structure exactly: 446
