@@ -166,7 +166,8 @@ def content_sketches_udf(text: pd.Series) -> pd.DataFrame:
 
 
 def simhash_band_keys(sim_col, n_bands: int = 4):
-    """64-bit simhash → 4 16-bit band keys (Hamming ≤3 ⇒ ≥1 shared band)."""
+    """64-bit hash → ``n_bands`` band keys of ``64 // n_bands`` bits
+    (Hamming < n_bands ⇒ ≥1 shared band)."""
     width = 64 // n_bands
     keys = []
     for b in range(n_bands):

@@ -17,7 +17,7 @@ zero-crossing rate, spectral-band energies via an FFT over the fake
 PCM) plus a 63-bit fingerprint: sign of (band energy − median) over
 a 9-segment × 7-band grid — a Haitsma-Kalker-style robust hash.
 Near-dup matching reuses the generic banded-hamming join from
-``operators.multimodal`` (pigeonhole banding, JVM-side bit_count).
+``operators.pairs`` (pigeonhole banding, JVM-side bit_count).
 
 Scale: payload bytes never shuffle — one mapInPandas pass emits
 compact features; the near-dup join runs on 8-byte fingerprints.
@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dedupe_spark.operators.multimodal import banded_hamming_pairs
+from dedupe_spark.operators.pairs import banded_hamming_pairs
 
 AUDIO_FEATURES_SCHEMA = (
     "media_id string, n_samples long, rms double, zero_cross_rate double, afp long"
@@ -145,7 +145,7 @@ def audio_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
 
 def near_duplicate_audio(features: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Banded-fingerprint near-dup pairs over audio fingerprints."""
-    return banded_hamming_pairs(features, "afp", max_hamming=max_hamming)
+    return banded_hamming_pairs(features, "media_id", "afp", max_hamming)
 
 
 def synthetic_audio(spark, n: int, seed: int = 13) -> DataFrame:

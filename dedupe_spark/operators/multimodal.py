@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedupe_spark.operators.pairs import banded_hamming_pairs
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "
     "width int, height int, duration_ms long"
@@ -155,70 +157,12 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, decoder: str = "fake")
     )
 
 
-def banded_hamming_pairs(
-    features: DataFrame,
-    hash_col: str,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    band_bits: int = 16,
-) -> DataFrame:
-    """Generic banded-fingerprint near-dup join: block on n_bands
-    band_bits-wide slices of a 64-bit fingerprint (pigeonhole: any pair
-    within hamming < n_bands shares ≥1 exact band), then refine
-    JVM-side with bit_count(xor). The ER blocking pattern applied to
-    any perceptual hash — image phash, audio fingerprint, simhash.
-
-    The guarantee requires ``max_hamming < n_bands`` — a pair with one
-    differing bit in EVERY band shares no band key and would be
-    silently missed — so that precondition is enforced."""
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} breaks the pigeonhole guarantee "
-            f"with n_bands={n_bands}; need max_hamming < n_bands "
-            "(raise n_bands or lower max_hamming)"
-        )
-    banded = features.select(
-        id_col,
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.lit(f"b{b}"),
-                        F.shiftrightunsigned(F.col(hash_col), b * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .cast("string"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, "band")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id1"),
-            F.col(f"b.{id_col}").alias("id2"),
-            F.bit_count(
-                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def near_duplicate_images(features: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Exact-phash blocking + in-block hamming refine: the ER blocking
     pattern applied to image dedupe. Blocks on phash bands (4×16-bit),
     so near-identical phashes collide; hamming check JVM-side via
     bit_count(xor)."""
-    return banded_hamming_pairs(features, "phash", max_hamming=max_hamming)
+    return banded_hamming_pairs(features, "media_id", "phash", max_hamming)
 
 
 def synthetic_media(spark, n: int, seed: int = 7) -> DataFrame:

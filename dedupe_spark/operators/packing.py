@@ -21,13 +21,78 @@ distributed prefix sum instead:
 The only global sort touches ``n_buckets`` rows; everything else is
 hash/range-parallel. Output is identical to the single-window
 formulation (the DuckDB oracle uses exactly that), at any
-parallelism.
+parallelism. ``running_sum`` is that prefix sum; ``pack_shards``
+divides it by the budget, and ``snm.distributed_rank`` is its
+weight-1 case.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def running_sum(
+    df: DataFrame,
+    order_cols: list[str],
+    out_col: str,
+    weight_col: str | None = None,
+    n_buckets: int = 1024,
+) -> DataFrame:
+    """Add ``out_col`` = exclusive running sum of ``weight_col`` (1 per
+    row when None, which makes it a 0-based rank) over rows ordered by
+    ``order_cols``; NULL for every row of an empty input.
+
+    The first order column must be integral (it is range-bucketed);
+    the order columns together must be unique, so the within-bucket
+    sort, and with it every running sum, is deterministic. Rows tied
+    on the first column share one bucket, so a dominant value makes a
+    single-task sort.
+    """
+    if n_buckets <= 0:
+        raise ValueError(f"n_buckets must be positive, got {n_buckets}")
+    key = order_cols[0]
+    weight = F.col(weight_col) if weight_col is not None else F.lit(1)
+
+    # O(1)-row aggregate to the driver — same cost class as the CC
+    # convergence fingerprint, not a data collect.
+    lo_hi = df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
+    if lo_hi is None or lo_hi["lo"] is None:
+        return df.withColumn(out_col, F.lit(None).cast("long"))
+    lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+
+    # Bucket by arithmetic shift right (exact floor-division by 2^k):
+    # ids may legitimately span the full int64 range (xxhash64 doc
+    # ids), where (col - lo) overflows under ANSI mode and float
+    # division loses bits past 2^53. The shift is overflow-free,
+    # exact, and monotone — contiguous ranges, as range-bucketing
+    # requires. Python ints compute k without overflow.
+    # clamp to 63: JVM shifts are mod-64, so k=64 would be a no-op
+    k = min(63, max(0, ((hi - lo) // n_buckets).bit_length()))
+    bucketed = df.withColumn("_rs_bucket", F.shiftright(F.col(key), k))
+
+    # Phase 1+2: per-bucket totals, then an exclusive running offset.
+    # The orderBy window here is the ONLY global sort and it runs over
+    # at most n_buckets rows.
+    partials = bucketed.groupBy("_rs_bucket").agg(F.sum(weight).alias("_rs_total"))
+    w_off = Window.orderBy("_rs_bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    offsets = partials.select(
+        "_rs_bucket",
+        (F.sum("_rs_total").over(w_off) - F.col("_rs_total")).alias("_rs_offset"),
+    )
+
+    # Phase 3: broadcast offsets back; per-bucket windows run in
+    # parallel, each sorting only its own contiguous range.
+    w_in = Window.partitionBy("_rs_bucket").orderBy(*order_cols).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return (
+        bucketed.join(F.broadcast(offsets), "_rs_bucket")
+        .withColumn(out_col, F.col("_rs_offset") + F.sum(weight).over(w_in) - weight)
+        .drop("_rs_bucket", "_rs_offset")
+    )
 
 
 def pack_shards(
@@ -48,56 +113,9 @@ def pack_shards(
     """
     if budget <= 0:
         raise ValueError(f"pack_shards: budget must be positive, got {budget}")
-    if n_buckets <= 0:
-        raise ValueError(f"pack_shards: n_buckets must be positive, got {n_buckets}")
-
-    # O(1)-row aggregate to the driver — same cost class as the CC
-    # convergence fingerprint, not a data collect.
-    lo_hi = df.agg(
-        F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
-    ).first()
-    if lo_hi is None or lo_hi["lo"] is None:
-        return df.withColumn(shard_col, F.lit(None).cast("long"))
-    lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
-
-    # Bucket by arithmetic shift right (exact floor-division by 2^k):
-    # ids may legitimately span the full int64 range (xxhash64 doc
-    # ids), where (col - lo) overflows under ANSI mode and float
-    # division loses bits past 2^53. The shift is overflow-free,
-    # exact, and monotone — contiguous ranges, as range-bucketing
-    # requires. Python ints compute k without overflow.
-    # clamp to 63: JVM shifts are mod-64, so k=64 would be a no-op
-    k = min(63, max(0, ((hi - lo) // n_buckets).bit_length()))
-    bucketed = df.withColumn("_pk_bucket", F.shiftright(F.col(order_col), k))
-
-    # Phase 1+2: per-bucket totals, then an exclusive running offset.
-    # The orderBy window here is the ONLY global sort and it runs over
-    # at most n_buckets rows.
-    partials = bucketed.groupBy("_pk_bucket").agg(
-        F.sum(weight_col).alias("_pk_total")
-    )
-    w_off = Window.orderBy("_pk_bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = partials.select(
-        "_pk_bucket",
-        (F.sum("_pk_total").over(w_off) - F.col("_pk_total")).alias("_pk_offset"),
-    )
-
-    # Phase 3: broadcast offsets back; per-bucket windows run in
-    # parallel, each sorting only its own contiguous range.
-    w_in = Window.partitionBy("_pk_bucket").orderBy(order_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    exclusive = (
-        F.col("_pk_offset")
-        + F.sum(weight_col).over(w_in)
-        - F.col(weight_col)
-    )
     return (
-        bucketed.join(F.broadcast(offsets), "_pk_bucket")
+        running_sum(df, [order_col], "_pk_cume", weight_col, n_buckets)
         # integer `div`, not float `/`: exact past 2^53 tokens
-        .withColumn("_pk_cume", exclusive)
         .withColumn(shard_col, F.expr(f"_pk_cume div {int(budget)}"))
-        .drop("_pk_bucket", "_pk_offset", "_pk_cume")
+        .drop("_pk_cume")
     )

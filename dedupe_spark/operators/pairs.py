@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dedupe_spark.functions.hashing import simhash_band_keys
+
 
 def pairs_per_block(
     keys: DataFrame,
@@ -143,6 +145,52 @@ def generate_pairs(
 
     cbs = per_block.groupBy("id1", "id2").agg(F.count(F.lit(1)).alias("weight"))
     return prune_cnp(cbs, cnp_k).select("id1", "id2"), capped
+
+
+def require_pigeonhole(max_hamming: int, n_bands: int = 4) -> None:
+    """Raise unless every pair within ``max_hamming`` bits shares one of
+    ``n_bands`` exact bands: a pair with one differing bit in every
+    band shares no band key and would be silently missed."""
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} breaks the pigeonhole guarantee "
+            f"with n_bands={n_bands}; need max_hamming < n_bands "
+            "(raise n_bands or lower max_hamming)"
+        )
+
+
+def banded_hamming_pairs(
+    features: DataFrame,
+    id_col: str,
+    hash_col: str,
+    max_hamming: int,
+    n_bands: int = 4,
+) -> DataFrame:
+    """features(id_col, hash_col) → (id1, id2, hamming): every canonical
+    (id1 < id2) pair of 64-bit fingerprints within ``max_hamming`` bits.
+
+    Pigeonhole banding (Manku, Jain & Das Sarma, WWW 2007): the hash is
+    cut into ``n_bands`` bands of ``64 // n_bands`` bits, and a pair
+    that differs in at most ``max_hamming < n_bands`` bits agrees
+    exactly on at least one band. The bands are block keys for
+    :func:`generate_pairs` (so a hot band value takes the grid split),
+    and the candidates are refined JVM-side with ``bit_count(xor)``.
+    ``max_hamming >= n_bands`` raises (:func:`require_pigeonhole`).
+    """
+    require_pigeonhole(max_hamming, n_bands)
+    keys = features.select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(simhash_band_keys(F.col(hash_col), n_bands)).alias("block_key"),
+    )
+    cand, _capped = generate_pairs(keys)
+    h1 = features.select(F.col(id_col).alias("id1"), F.col(hash_col).alias("_h1"))
+    h2 = features.select(F.col(id_col).alias("id2"), F.col(hash_col).alias("_h2"))
+    return (
+        cand.join(h1, "id1")
+        .join(h2, "id2")
+        .select("id1", "id2", F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2"))).alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
 
 
 def attach_texts(pairs: DataFrame, docs: DataFrame) -> DataFrame:

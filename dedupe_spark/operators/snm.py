@@ -9,11 +9,11 @@ with *close* keys become candidates without any equality predicate.
 
 Scale notes (north_rule):
   * a naive ``row_number().over(Window.orderBy(key))`` is the classic
-    scale-killer — one task sorts 100 TB. ``distributed_rank`` reuses
-    the two-phase prefix-sum shape of ``packing.pack_shards``:
-    range-bucket by an overflow-free arithmetic shift, per-bucket
-    counts (tiny table) get an exclusive running offset via a window
-    over the SMALL table only, then per-bucket ranks run in parallel;
+    scale-killer — one task sorts 100 TB. ``distributed_rank`` is
+    ``packing.running_sum`` with weight 1: range-bucket by an
+    overflow-free arithmetic shift, per-bucket counts (tiny table) get
+    an exclusive running offset via a window over the SMALL table
+    only, then per-bucket ranks run in parallel;
   * the neighborhood pairing is an equi-join on rank (rank2 = rank1 +
     d, d ∈ 1..window-1) after a ``window - 1``-way explode — shuffle
     keys are ranks (dense, collision-free), never the skewed sort key;
@@ -23,8 +23,10 @@ Scale notes (north_rule):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dedupe_spark.operators.packing import running_sum
 
 
 def distributed_rank(
@@ -42,37 +44,8 @@ def distributed_rank(
     int64 arithmetic); ``id_col`` must be a unique tiebreak so the
     total order — and every downstream pair — is deterministic.
     """
-    if n_buckets <= 0:
-        raise ValueError(f"distributed_rank: n_buckets must be positive, got {n_buckets}")
-
-    # O(1)-row aggregate; same cost class as packing.pack_shards.
-    lo_hi = df.agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi")).first()
-    if lo_hi is None or lo_hi["lo"] is None:
-        return df.withColumn(rank_col, F.lit(None).cast("long"))
-    lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
-
-    # Arithmetic shift right = exact floor-division by 2^k: overflow-
-    # free across the full signed-int64 key range and monotone, so
-    # buckets are contiguous key ranges (see packing.pack_shards).
-    k = min(63, max(0, ((hi - lo) // n_buckets).bit_length()))
-    bucketed = df.withColumn("_sn_bucket", F.shiftright(F.col(key_col), k))
-
-    partials = bucketed.groupBy("_sn_bucket").agg(F.count(F.lit(1)).alias("_sn_n"))
-    w_off = Window.orderBy("_sn_bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = partials.select(
-        "_sn_bucket",
-        (F.sum("_sn_n").over(w_off) - F.col("_sn_n")).alias("_sn_offset"),
-    )
-
-    w_in = Window.partitionBy("_sn_bucket").orderBy(
-        F.asc(key_col), F.asc(id_col)
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), "_sn_bucket")
-        .withColumn(rank_col, F.col("_sn_offset") + F.row_number().over(w_in))
-        .drop("_sn_bucket", "_sn_offset")
+    return running_sum(df, [key_col, id_col], rank_col, n_buckets=n_buckets).withColumn(
+        rank_col, F.col(rank_col) + 1
     )
 
 

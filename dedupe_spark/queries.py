@@ -1866,9 +1866,9 @@ def q_recrawl_diff(spark: SparkSession, sf: str) -> DataFrame:
     absent from the old crawl → added; doc_id%10==8 absent from the
     new crawl → removed; doc_id%7==0 changes content), then a
     single full outer join on doc_id classifies every doc as
-    added/removed/changed/unchanged. One shuffle; at 10^12 docs both
-    snapshots are bucketed on doc_id so even that shuffle disappears
-    (sources/bucketed.py)."""
+    added/removed/changed/unchanged. One shuffle; at 10^12 docs,
+    snapshots written bucketed on doc_id (Iceberg ``bucket(N, doc_id)``
+    or ``bucketBy``) would make even that shuffle disappear."""
     docs = load_table(spark, sf, "documents")
     old = docs.where(F.col("doc_id") % 10 != 9).select(
         "doc_id", F.md5("text").alias("old_md5")

@@ -1,5 +1,8 @@
 """Adaptive-batch sink: the reference's cap-halving retry loop.
 
+Kept although no stage calls it: it is the only implementation of
+SURVEY I3, adaptive batching (DedupeRAM.java:65-76).
+
 Reference semantics (DedupeRAM.java:66-76,200-206): bulk updates start
 at an unbounded batch cap; on a failed POST the cap halves
 (``cap >>= 1``) and the batch retries, so the client converges onto

@@ -205,11 +205,11 @@ def run_incremental_exact_dedupe(
 
 
 def _within_batch_near_suppress(out: DataFrame, max_hamming: int) -> DataFrame:
-    """Within-batch near-dup suppression, CC-exact: band-colliding
-    candidate pairs (grid-skew-safe generator — a pathologically hot
-    band bucket inside one micro-batch decomposes over the salt grid
-    instead of landing O(n²) in a single shuffle partition) are Hamming
-    refined, the verified edges are closed transitively with the SAME
+    """Within-batch near-dup suppression, CC-exact: the Hamming-verified
+    band collisions from ``pairs.banded_hamming_pairs`` (grid-skew-safe
+    — a pathologically hot band bucket inside one micro-batch
+    decomposes over the salt grid instead of landing O(n²) in a single
+    shuffle partition) are closed transitively with the SAME
     large-star/small-star components the batch pipeline uses, and the
     earliest (warc_ts, url) per component survives.
 
@@ -222,26 +222,14 @@ def _within_batch_near_suppress(out: DataFrame, max_hamming: int) -> DataFrame:
     batch semantics exactly. The CC rounds see only the micro-batch's
     collision edges — cost is bounded by batch size, not store size.
     """
-    from dedupe_spark.functions.hashing import simhash_band_keys
     from dedupe_spark.operators.cc import assign_all
-    from dedupe_spark.operators.pairs import generate_pairs
+    from dedupe_spark.operators.pairs import banded_hamming_pairs
 
     # CC nodes are xxhash64(url) — the pipeline's doc-id convention
     # (cc.py's driver finish is long-typed)
-    key_rows = out.select(
-        F.xxhash64("url").alias("doc_id"),
-        F.explode(simhash_band_keys(F.col("simhash"))).alias("block_key"),
-    )
-    cand, _capped = generate_pairs(key_rows)
-    meta = out.select(F.xxhash64("url").alias("nid"), "simhash")
-    m1 = meta.select(F.col("nid").alias("id1"), F.col("simhash").alias("h1"))
-    m2 = meta.select(F.col("nid").alias("id2"), F.col("simhash").alias("h2"))
-    edges = (
-        cand.join(m1, "id1")
-        .join(m2, "id2")
-        .where(F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))) <= max_hamming)
-        .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    )
+    edges = banded_hamming_pairs(
+        out.select(F.xxhash64("url").alias("nid"), "simhash"), "nid", "simhash", max_hamming
+    ).select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     clusters = assign_all(
         out.select(F.xxhash64("url").alias("node")), edges
     ).withColumnRenamed("node", "__nid")
@@ -321,6 +309,10 @@ def run_incremental_near_dedupe(
     keys-only columnar IO on the two indexes; candidate generation is
     an equi-join on 16-bit band keys; the refine is JVM-side
     ``bit_count(xor)`` — no Python touches a stored row.
+
+    ``max_hamming`` must stay below the 4 simhash bands, within the
+    batch and across batches alike; otherwise this raises before the
+    stream starts, so no checkpoint is written.
     """
     import glob as _glob
     import hashlib
@@ -331,6 +323,9 @@ def run_incremental_near_dedupe(
         lsh_band_keys,
         simhash_band_keys,
     )
+    from dedupe_spark.operators.pairs import require_pigeonhole
+
+    require_pigeonhole(max_hamming)
 
     arrivals = (
         stream_pages(spark, input_dir)

@@ -88,11 +88,11 @@ def test_banded_hamming_rejects_broken_pigeonhole(spark):
     one bit per band — must raise."""
     import pytest
 
-    from dedupe_spark.operators.multimodal import banded_hamming_pairs
+    from dedupe_spark.operators.pairs import banded_hamming_pairs
 
     df = spark.createDataFrame([("a", 1), ("b", 2)], "media_id string, phash long")
     with pytest.raises(ValueError, match="pigeonhole"):
-        banded_hamming_pairs(df, "phash", max_hamming=4, n_bands=4)
+        banded_hamming_pairs(df, "media_id", "phash", max_hamming=4, n_bands=4)
 
 
 def test_real_codec_path_when_pillow_available(spark):

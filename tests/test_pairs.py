@@ -97,3 +97,44 @@ def test_grid_degenerate_single_bucket(spark):
     pairs, _ = generate_pairs(_keys_df(spark, blocks), hot_threshold=5, salt_buckets=1)
     got = {(r["id1"], r["id2"]) for r in pairs.collect()}
     assert got == _expected_pairs(blocks)
+
+
+def test_banded_hamming_pairs_matches_brute_force_popcount(spark):
+    """Every pair within max_hamming bits, and only those, against an
+    all-pairs Python popcount. 1,050 fingerprints share the low 16-bit
+    band, so that band value takes the hot grid path; near pairs are
+    planted inside it and in the cold blocks, with flips spread over
+    three bands so only one band is shared."""
+    import random
+
+    from dedupe_spark.operators.pairs import banded_hamming_pairs
+
+    rng = random.Random(20261020)
+    mask = 2**64 - 1
+    hashes = [(rng.getrandbits(48) << 16) | 0xBEEF for _ in range(1050)]
+    hashes += [hashes[i] ^ (1 << rng.randrange(16, 64)) for i in range(0, 40, 2)]
+    hashes += [rng.getrandbits(64) for _ in range(200)]
+    hashes += [
+        hashes[-1 - i] ^ (1 << rng.randrange(0, 16)) ^ (1 << rng.randrange(16, 32))
+        ^ (1 << rng.randrange(32, 48))
+        for i in range(0, 60, 3)
+    ]
+    rows = [(i, h - 2**64 if h >= 2**63 else h) for i, h in enumerate(hashes)]
+    assert sum(1 for _, h in rows if h & 0xFFFF == 0xBEEF) > 1000  # hot_threshold
+
+    def ham(a, b):
+        return bin((a ^ b) & mask).count("1")
+
+    want = {
+        (i, j, ham(hi, hj))
+        for (i, hi), (j, hj) in itertools.combinations(rows, 2)
+        if ham(hi, hj) <= 3
+    }
+    df = spark.createDataFrame(rows, "doc_id long, fp long")
+    got = [
+        (r["id1"], r["id2"], r["hamming"])
+        for r in banded_hamming_pairs(df, "doc_id", "fp", 3).collect()
+    ]
+    assert len(got) == len(set(got))  # each pair once, however many bands it shares
+    assert set(got) == want
+    assert len(want) >= 40

@@ -43,31 +43,6 @@ def test_incremental_dedupe_drain_and_restart(spark, paged_input, tmp_path):
     assert spark.read.parquet(store).count() == n_distinct
 
 
-def test_stateful_first_seen(spark, paged_input, tmp_path):
-    """applyInPandasWithState custom dedup: exactly one output row per
-    distinct content key, with deterministic representative."""
-    from dedupe_spark.streaming.incremental import with_content_key
-    from dedupe_spark.streaming.stateful import first_seen_pages
-
-    input_dir, pages, _ = paged_input
-    stream = with_content_key(stream_pages(spark, input_dir))
-    q = (
-        first_seen_pages(stream)
-        .writeStream.format("memory")
-        .queryName("first_seen_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select content_md5, url from first_seen_test").collect()
-    keys = [r["content_md5"] for r in got]
-    assert len(keys) == len(set(keys))  # one row per key
-    n_distinct = pages.select(F.md5(F.col("text"))).distinct().count()
-    assert len(keys) == n_distinct
-
-
 def test_page_rate_window_counts(spark, paged_input):
     input_dir, pages, _ = paged_input
     stream = stream_pages(spark, input_dir)

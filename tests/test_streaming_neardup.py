@@ -1,5 +1,6 @@
-"""Streaming near-dup suppression: simhash watermark dedup + banded
-stateful Hamming filter."""
+"""Streaming near-dup suppression through ``run_incremental_near_dedupe``:
+within-batch CC over banded-Hamming edges, cross-batch simhash and
+MinHash band indexes, and the pigeonhole guard on ``max_hamming``."""
 
 from __future__ import annotations
 
@@ -7,110 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark.corpus import generate_pages
-from dedupe_spark.functions.hashing import simhash64
-from dedupe_spark.streaming.incremental import stream_pages
-from dedupe_spark.streaming.neardup import (
-    banded_near_dup_filter,
-    simhash_dedup_within_watermark,
-)
-
-
-@pytest.fixture(scope="module")
-def stream_input(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("neardup_in")
-    pages = generate_pages(spark, 300, seed=23).cache()
-    d = str(base / "pages")
-    pages.write.mode("overwrite").parquet(d)
-    return d, pages
-
-
-def test_simhash_watermark_dedup(spark, stream_input, tmp_path):
-    input_dir, pages = stream_input
-    q = (
-        simhash_dedup_within_watermark(stream_pages(spark, input_dir))
-        .writeStream.format("memory")
-        .queryName("simdedup_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select simhash from simdedup_test").collect()
-    hashes = [r["simhash"] for r in got]
-    assert len(hashes) == len(set(hashes))  # one survivor per simhash
-    # every distinct batch-side simhash is represented
-    want = {simhash64(r["text"]) for r in pages.select("text").collect()}
-    assert set(hashes) == want
-
-
-def test_banded_filter_suppresses_planted_near_dups(spark, stream_input, tmp_path):
-    """Exact duplicates (hamming 0) must collapse to one survivor per
-    band bucket; survivors' pairwise hamming within a bucket > k."""
-    input_dir, pages = stream_input
-    q = (
-        banded_near_dup_filter(stream_pages(spark, input_dir), band=0, max_hamming=3)
-        .writeStream.format("memory")
-        .queryName("banded_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    survivors = spark.sql("select url, simhash from banded_test").collect()
-    n_pages = pages.count()
-    assert 0 < len(survivors) < n_pages  # something suppressed, not all
-    # no two survivors in the same band-0 bucket within hamming<=3
-    by_bucket: dict[int, list[int]] = {}
-    for r in survivors:
-        by_bucket.setdefault(r["simhash"] & 0xFFFF, []).append(r["simhash"])
-    for hashes in by_bucket.values():
-        for i in range(len(hashes)):
-            for j in range(i + 1, len(hashes)):
-                ham = bin((hashes[i] ^ hashes[j]) & (2**64 - 1)).count("1")
-                assert ham > 3, (hashes[i], hashes[j], ham)
-    # exact-dup clusters (same html → same simhash) collapse to one
-    urls = {r["url"] for r in survivors}
-    assert len(urls) == len(survivors)
-
-
-def test_multi_band_guarantee_and_single_band_miss(spark, tmp_path):
-    """Planted hamming<=3 pairs: ALL suppressed with K=4 composed band
-    legs; the pair whose differing bits sit entirely inside band 0 is
-    MISSED with K=1 — why multi_band_near_dup_drain exists."""
-    import pandas as pd
-
-    from dedupe_spark.streaming.neardup import multi_band_near_dup_drain
-
-    h0 = 0x123456789ABCDEF0
-    g0 = 0x0FEDCBA987654321
-    far = 0x5555AAAA5555AAAA
-    rows = [
-        ("u/a", "2026-01-01T00:00:00", h0),
-        ("u/b", "2026-01-01T00:01:00", h0 ^ 0b111),          # 3 bits, band 0 only
-        ("u/c", "2026-01-01T00:00:30", g0),
-        ("u/d", "2026-01-01T00:02:00", g0 ^ (0b101 << 32)),   # 2 bits, band 2 only
-        ("u/e", "2026-01-01T00:03:00", far),                  # no near partner
-    ]
-    pdf = pd.DataFrame(rows, columns=["url", "warc_ts", "simhash"])
-    pdf["warc_ts"] = pd.to_datetime(pdf["warc_ts"])
-    src = spark.createDataFrame(pdf, schema="url string, warc_ts timestamp, simhash long")
-    in_dir = str(tmp_path / "precomputed_in")
-    src.write.mode("overwrite").parquet(in_dir)
-
-    out4 = multi_band_near_dup_drain(
-        spark, in_dir, str(tmp_path / "multi4"), n_bands=4, precomputed=True
-    )
-    got4 = {r["url"] for r in spark.read.parquet(out4).collect()}
-    assert got4 == {"u/a", "u/c", "u/e"}  # every planted pair suppressed
-
-    out1 = multi_band_near_dup_drain(
-        spark, in_dir, str(tmp_path / "multi1"), n_bands=1, precomputed=True
-    )
-    got1 = {r["url"] for r in spark.read.parquet(out1).collect()}
-    assert "u/b" in got1          # band-0-only pair escapes a single leg
-    assert "u/d" not in got1      # band-0-sharing pair still caught
 
 
 def _near_pair_and_loner(pages):
@@ -366,6 +263,51 @@ def test_within_batch_suppression_matches_cc_oracle_property(spark):
             comps.setdefault(find(u), []).append((ts, u))
         want = {min(members)[1] for members in comps.values()}
         assert got == want, f"trial {trial}: {sorted(got)} != {sorted(want)}"
+
+
+def test_every_band_caught_within_batch(spark):
+    """Planted Hamming <= 3 pairs that share exactly one 16-bit band
+    (band 0 only, band 2 only) are both suppressed; the loner stays."""
+    from datetime import datetime
+
+    h0 = 0x123456789ABCDEF0
+    g0 = 0x0FEDCBA987654321
+    far = 0x5555AAAA5555AAAA
+    rows = [
+        ("u/a", datetime(2026, 1, 1, 0, 0, 0), h0),
+        ("u/b", datetime(2026, 1, 1, 0, 1, 0), h0 ^ 0b111),  # 3 bits, band 0 only
+        ("u/c", datetime(2026, 1, 1, 0, 0, 30), g0),
+        ("u/d", datetime(2026, 1, 1, 0, 2, 0), g0 ^ (0b101 << 32)),  # 2 bits, band 2 only
+        ("u/e", datetime(2026, 1, 1, 0, 3, 0), far),  # no near partner
+    ]
+    assert _suppress(spark, rows) == {"u/a", "u/c", "u/e"}
+
+
+def test_max_hamming_past_the_bands_raises(spark, tmp_path):
+    """max_hamming=4 with 4 simhash bands would miss a pair with one
+    flipped bit per band: both entry points raise, and the stream
+    never starts (no checkpoint is written)."""
+    from datetime import datetime
+
+    from dedupe_spark.streaming.incremental import run_incremental_near_dedupe
+
+    h = 0x123456789ABCDEF0
+    one_bit_per_band = h ^ (1 | 1 << 16 | 1 << 32 | 1 << 48)
+    rows = [
+        ("u/a", datetime(2026, 1, 1), h),
+        ("u/b", datetime(2026, 1, 1, 0, 1), one_bit_per_band),
+    ]
+    with pytest.raises(ValueError, match="pigeonhole"):
+        _suppress(spark, rows, max_hamming=4)
+
+    in_dir = str(tmp_path / "in")
+    ckpt = tmp_path / "ckpt"
+    generate_pages(spark, 10, seed=3).write.parquet(in_dir)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        run_incremental_near_dedupe(
+            spark, in_dir, str(tmp_path / "store"), str(ckpt), max_hamming=4
+        )
+    assert not ckpt.exists()
 
 
 def test_cross_batch_minhash_catches_simhash_blind_rewrite(spark, tmp_path):
