@@ -142,17 +142,13 @@ def main() -> None:
     if not os.path.exists(f"{corpus_dir}/_SUCCESS"):
         generate_pages(spark, n_pages, seed=42).write.mode("overwrite").parquet(corpus_dir)
     pages = spark.read.parquet(corpus_dir)
-    # fast_mode: commit only the resume-critical stages (s5_scored/
-    # s7/s8) — the production fast path; full-commit mode is separately
-    # exercised by tests and scripts/bench_scaling.py
-    from dedupe_spark.pipeline import PipelineConfig
-
-    cfg = PipelineConfig(fast_mode=True)
+    # the default config, which commits every stage: each iteration
+    # starts from an empty work dir, so nothing is resumed
     t_pipe = float("inf")
     for _ in range(3):
         shutil.rmtree(work, ignore_errors=True)
         t0 = time.time()
-        out = run_pipeline(spark, pages, work, config=cfg)
+        out = run_pipeline(spark, pages, work)
         t_pipe = min(t_pipe, round(time.time() - t0, 3))
     n_pairs = out["s5_scored"].count()
     n_clusters = out["s8_report"].count()

@@ -69,12 +69,7 @@ def _shingle_hashes(text: str, width: int = 3) -> np.ndarray:
 
 def minhash_signature(text: str, width: int = 3) -> np.ndarray:
     """k-vector of minima of universal hashes over the shingle set."""
-    x = _shingle_hashes(text, width)
-    if x.size == 0:
-        return np.zeros(MINHASH_K, dtype=np.int64)
-    # (k, n) = a[:,None]*x[None,:] + b ; use uint64 wrap-around then mod p.
-    v = (_A[:, None] * x[None, :] + _B[:, None]) % np.uint64(_MERSENNE_P)
-    return v.min(axis=1).astype(np.int64)
+    return _minhash_from_hashes(_shingle_hashes(text, width))
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -110,6 +105,17 @@ def _splitmix64(h: np.ndarray) -> np.ndarray:
     z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
+
+
+def _minhash_from_hashes(x: np.ndarray) -> np.ndarray:
+    """MinHash signature of the (distinct) shingle hash set: per
+    coefficient pair, the minimum of ``(a*x + b) mod p`` (all zeros for
+    an empty set)."""
+    if x.size == 0:
+        return np.zeros(MINHASH_K, dtype=np.int64)
+    # (k, n) = a[:,None]*x[None,:] + b ; use uint64 wrap-around then mod p.
+    v = (_A[:, None] * x[None, :] + _B[:, None]) % np.uint64(_MERSENNE_P)
+    return v.min(axis=1).astype(np.int64)
 
 
 def simhash_from_hashes(h32: np.ndarray) -> int:
@@ -150,10 +156,7 @@ def simhash_udf(text: pd.Series) -> pd.Series:
 def content_sketches(text: str) -> tuple[list[int], int]:
     """(minhash signature, simhash) from ONE shingle-hashing pass."""
     x = _shingle_hashes(text or "")
-    if x.size == 0:
-        return np.zeros(MINHASH_K, dtype=np.int64).tolist(), 0
-    v = (_A[:, None] * x[None, :] + _B[:, None]) % np.uint64(_MERSENNE_P)
-    return v.min(axis=1).astype(np.int64).tolist(), simhash_from_hashes(x)
+    return _minhash_from_hashes(x).tolist(), simhash_from_hashes(x)
 
 
 @F.pandas_udf(T.StructType([

@@ -1,6 +1,6 @@
 """End-to-end entity-resolution pipeline (SURVEY.md §7.1), resumable.
 
-Stage graph (each stage a pure DataFrame transform, checkpointed via
+Stage graph (each stage a pure DataFrame transform, committed via
 StageIO so a killed job resumes from the last completed stage without
 recomputing scored pairs — north_rule):
 
@@ -102,16 +102,17 @@ class PipelineConfig:
     # corpus needs every candidate scored for the F1=1.0 gate; k=2
     # preserves it there — see test_pipeline).
     meta_blocking_cnp_k: int | None = None
-    # fast_mode: materialize ONLY the expensive, resume-critical stages
-    # (s5_scored — "never recompute scored pairs", north_rule — plus
-    # s7_clusters and the tiny s8_report). s1-s4 are cheap recomputes
-    # relative to scoring and are kept in memory (MEMORY_AND_DISK) for
-    # the duration of the run instead of being committed to the stage
-    # store. This removes 4 full write+read round-trips of the largest
-    # intermediates per run — the fixed cost that dominated job-level
-    # scaling at sandbox SF. A resumed run still skips any stage a
-    # previous full-mode run committed.
-    fast_mode: bool = False
+
+
+class PipelineRun(dict[str, DataFrame]):
+    """The stage frames one run reached, keyed by stage name.
+
+    ``skipped[stage]`` is True where the stage was read from its commit
+    (a resume) and False where this run built it."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.skipped: dict[str, bool] = {}
 
 
 def run_pipeline(
@@ -120,124 +121,72 @@ def run_pipeline(
     work_dir: str,
     config: PipelineConfig | None = None,
     stop_after: str | None = None,
-) -> dict[str, DataFrame]:
-    """Run (or resume) the pipeline; returns the stage DataFrames.
+) -> PipelineRun:
+    """Run (or resume) the pipeline. Every stage commits through
+    ``StageIO``, so a rerun reads each committed stage instead of
+    building it; its lineage is the stage before it.
 
-    ``stop_after`` lets tests simulate a kill after stage k.
+    ``stop_after`` ends the run after that stage (tests use it to
+    simulate a kill after stage k); any value outside ``STAGES`` raises.
     """
+    if stop_after is not None and stop_after not in STAGES:
+        raise ValueError(f"stop_after={stop_after!r} is not a stage; expected one of {STAGES}")
     cfg = config or PipelineConfig()
     io = StageIO(spark, work_dir)
-    out: dict[str, DataFrame] = {}
-    skipped: dict[str, bool] = {}
-    ephemeral = {"s1_docs", "s2_exact", "s3_keys", "s4_pairs"} if cfg.fast_mode else set()
-    cached: list[DataFrame] = []
-
-    # Cache-hygiene hook: fast_mode persists s1-s4 for the run; a
-    # long-lived driver looping run_pipeline must not accumulate cached
-    # tables until LRU eviction. `_cleanup` unpersists exactly the
-    # frames THIS run cached (safe any time — the durable stages are
-    # committed, and an ephemeral frame consumed later just recomputes
-    # lazily); a full run calls it automatically after s8.
-    def cleanup() -> None:
-        for df in cached:
-            df.unpersist()
-        cached.clear()
-
-    out["_cleanup"] = cleanup  # type: ignore[assignment]
-
-    def stage(name: str, build, lineage: str) -> DataFrame:
-        if name in ephemeral:
-            # fast_mode: reuse a prior full-mode commit if one exists,
-            # else keep the stage in memory — no stage-store round-trip.
-            if io.is_complete(name):
-                df, was_skipped = io.read(name), True
-            else:
-                df, was_skipped = build().persist(), False
-                cached.append(df)
-        else:
-            df, was_skipped = io.run_stage(name, build, lineage=lineage)
-        out[name] = df
-        skipped[name] = was_skipped
-        return df
+    out = PipelineRun()
 
     if cfg.crawl_url_dedup:
         from dedupe_spark.functions.urls import dedup_fetches
 
         pages = dedup_fetches(pages)
 
-    docs = stage("s1_docs", lambda: extract_docs(pages), "pages")
-    if stop_after == "s1_docs":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
-
     # S2: exact-duplicate collapse. rep_id = min doc_id per content hash.
     # Texts are NOT re-stored here (they live in s1): at 100 TB the text
     # column dominates the table, and s2's consumers need only ids and
     # hashes — representatives re-join their text from s1 on demand.
     def build_exact() -> DataFrame:
-        hashed = docs.withColumn("content_md5", content_hash(F.col("text")))
+        hashed = out["s1_docs"].withColumn("content_md5", content_hash(F.col("text")))
         w_min = hashed.groupBy("content_md5").agg(F.min("doc_id").alias("rep_id"))
         return hashed.join(w_min, "content_md5").select(
             "doc_id", "url", "lang", "n_chars", "content_md5", "rep_id"
         )
 
-    exact = stage("s2_exact", build_exact, "s1_docs")
-    if stop_after == "s2_exact":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
+    def reps() -> DataFrame:
+        rep_cols = ["doc_id", "url", "text"] if cfg.use_domain else ["doc_id", "text"]
+        return (
+            out["s2_exact"].where(F.col("doc_id") == F.col("rep_id"))
+            .select("doc_id")
+            .join(out["s1_docs"].select(*rep_cols), "doc_id")
+        )
 
-    rep_cols = ["doc_id", "url", "text"] if cfg.use_domain else ["doc_id", "text"]
-    reps = (
-        exact.where(F.col("doc_id") == F.col("rep_id"))
-        .select("doc_id")
-        .join(docs.select(*rep_cols), "doc_id")
-    )
-
-    keys = stage(
-        "s3_keys",
-        lambda: block_keys(
-            reps,
+    def build_keys() -> DataFrame:
+        return block_keys(
+            reps(),
             use_minhash=True,
             use_simhash=cfg.use_simhash,
             use_ngrams=cfg.use_ngrams,
             use_domain=cfg.use_domain,
             n_bands=cfg.n_bands,
             rows_per_band=cfg.rows_per_band,
-        ),
-        "s2_exact",
-    )
-    if stop_after == "s3_keys":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
+        )
 
     def build_pairs() -> DataFrame:
         p, capped = generate_pairs(
-            keys,
+            out["s3_keys"],
             hot_threshold=cfg.hot_threshold,
             salt_buckets=cfg.salt_buckets,
             max_block_size=cfg.max_block_size,
             cnp_k=cfg.meta_blocking_cnp_k,
         )
-        # The capped-block audit is an eager job over the s1→s3 lineage;
-        # on a fast_mode RESUME whose scored pairs are already committed
-        # the pairs are never consumed, so running it would recompute
-        # extraction + sketching for nothing — skip it there (the count
-        # ran when s5 was first produced).
-        if not (cfg.fast_mode and io.is_complete("s5_scored")):
-            n_capped = capped.count()
-            if n_capped:
-                # never silent (SURVEY.md §7.4) — surfaced in logs + metrics
-                log.warning(
-                    "%d blocks exceeded max_block_size=%s and were capped",
-                    n_capped,
-                    cfg.max_block_size,
-                )
+        n_capped = capped.count()
+        if n_capped:
+            # never silent (SURVEY.md §7.4) — surfaced in logs + metrics
+            log.warning(
+                "%d blocks exceeded max_block_size=%s and were capped",
+                n_capped,
+                cfg.max_block_size,
+            )
         return p
-
-    pairs = stage("s4_pairs", build_pairs, "s3_keys")
-    if stop_after == "s4_pairs":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
 
     # S5: features + scores in ONE materialized stage — the expensive
     # compute is the feature UDFs; the affine+sigmoid score is one more
@@ -247,6 +196,7 @@ def run_pipeline(
     # (scoring.pair_features), run on the s4 candidates only — the
     # same s5 as the catalog's q_er_pipeline_clusters.
     def build_scored() -> DataFrame:
+        r = reps()
         idf = None
         if cfg.use_global_idf:
             from dedupe_spark.functions.similarity import compute_idf
@@ -254,19 +204,15 @@ def run_pipeline(
             # IDF over the representatives — the population the pairs
             # are drawn from; computed only when s5 actually builds
             # (a resume with s5 committed never pays the corpus pass)
-            idf = compute_idf(reps)
+            idf = compute_idf(r)
         feats = scoring.pair_features(
-            attach_texts(pairs, reps), idf=idf, sc=spark.sparkContext
+            attach_texts(out["s4_pairs"], r), idf=idf, sc=spark.sparkContext
         )
         return scoring.score_pairs(feats, cfg.weights, cfg.bias)
 
-    scores = stage("s5_scored", build_scored, "s4_pairs")
-    if stop_after == "s5_scored":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
-
     def build_clusters() -> DataFrame:
-        match_edges = scoring.matches(scores, cfg.threshold).select(
+        exact = out["s2_exact"]
+        match_edges = scoring.matches(out["s5_scored"], cfg.threshold).select(
             F.col("id1").alias("src"), F.col("id2").alias("dst")
         )
         star_edges = exact.where(F.col("doc_id") != F.col("rep_id")).select(
@@ -277,20 +223,26 @@ def run_pipeline(
             F.col("node").alias("doc_id"), "cluster_id"
         )
 
-    clusters = stage("s7_clusters", build_clusters, "s5_scored")
-    if stop_after == "s7_clusters":
-        out["_skipped"] = skipped  # type: ignore[assignment]
-        return out
+    def build_report() -> DataFrame:
+        return (
+            out["s7_clusters"].groupBy("cluster_id")
+            .agg(F.count(F.lit(1)).alias("members"))
+            .where(F.col("members") >= 2)
+        )
 
-    stage(
-        "s8_report",
-        lambda: clusters.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("members"))
-        .where(F.col("members") >= 2),
-        "s7_clusters",
-    )
-    # full run: everything durable is committed — release the run's
-    # ephemeral caches now (consumers of s1-s4 recompute lazily).
-    cleanup()
-    out["_skipped"] = skipped  # type: ignore[assignment]
+    builds = {
+        "s1_docs": lambda: extract_docs(pages),
+        "s2_exact": build_exact,
+        "s3_keys": build_keys,
+        "s4_pairs": build_pairs,
+        "s5_scored": build_scored,
+        "s7_clusters": build_clusters,
+        "s8_report": build_report,
+    }
+    lineage = "pages"
+    for name in STAGES:
+        out[name], out.skipped[name] = io.run_stage(name, builds[name], lineage=lineage)
+        if name == stop_after:
+            break
+        lineage = name
     return out

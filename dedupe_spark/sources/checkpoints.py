@@ -30,6 +30,7 @@ from collections.abc import Callable
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 CHECKPOINT_SCHEMA = (
     "stage string, partition_id int, rows_in long, rows_out long, "
@@ -105,17 +106,26 @@ class StageIO:
         return os.path.exists(self._marker(stage))
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self.stage_dir(stage))
+        """Read a committed stage with the schema its marker recorded: no
+        schema-inference job. A marker without one infers it."""
+        reader = self.spark.read
+        schema = self._marker_info(stage).get("schema")
+        if schema:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self.stage_dir(stage))
 
     # -- write with lineage ------------------------------------------------
-    def write(self, df: DataFrame, stage: str, lineage: str = "") -> DataFrame:
+    def write(
+        self, df: DataFrame, stage: str, lineage: str = "", t_start: float | None = None
+    ) -> DataFrame:
         """Materialize a stage: parquet data + per-partition counter rows.
 
         Counters are computed from the written files (ground truth, not
         the plan) so a resumed run can audit exactly what each partition
-        produced.
+        produced. ``t_start`` defaults to now; :meth:`run_stage` passes
+        the time before its build, so eager work inside a build counts.
         """
-        t_start = time.time()
+        t_start = time.time() if t_start is None else t_start
         out = self.stage_dir(stage)
         df.write.mode("overwrite").parquet(out)
         # re-read WITH the known schema: skips the footer-sampling
@@ -129,31 +139,21 @@ class StageIO:
         # input→output partition mapping doesn't survive a shuffle).
         rows_in = self._stage_rows_out(lineage)
         t_end = time.time()
+        files = sorted(glob.glob(os.path.join(out, "**", "part-*.parquet"), recursive=True))
+        # a stage with no part files still records one row (partition -1)
+        rows_out = {i: pq.read_metadata(f).num_rows for i, f in enumerate(files)} or {-1: 0}
         rows = [
             {
                 "stage": stage,
                 "partition_id": i,
                 "rows_in": rows_in,
-                "rows_out": pq.read_metadata(f).num_rows,
+                "rows_out": n,
                 "t_start": t_start,
                 "t_end": t_end,
                 "status": "complete",
                 "lineage": lineage,
             }
-            for i, f in enumerate(
-                sorted(glob.glob(os.path.join(out, "**", "part-*.parquet"), recursive=True))
-            )
-        ] or [
-            {
-                "stage": stage,
-                "partition_id": -1,
-                "rows_in": rows_in,
-                "rows_out": 0,
-                "t_start": t_start,
-                "t_end": t_end,
-                "status": "complete",
-                "lineage": lineage,
-            }
+            for i, n in rows_out.items()
         ]
         self._append_checkpoint_rows(rows)
         with open(self._marker(stage), "w") as f:
@@ -165,6 +165,7 @@ class StageIO:
                     "t_start": t_start,
                     "t_end": t_end,
                     "lineage": lineage,
+                    "schema": df.schema.json(),
                 },
                 f,
             )
@@ -180,15 +181,20 @@ class StageIO:
         """Run (or skip) one stage; returns (df, was_skipped)."""
         if not force and self.is_complete(stage):
             return self.read(stage), True
-        return self.write(build(), stage, lineage=lineage), False
+        t_start = time.time()
+        return self.write(build(), stage, lineage=lineage, t_start=t_start), False
 
-    def _stage_rows_out(self, stage: str) -> int:
-        """Total rows a completed stage wrote (-1 if unknown/external)."""
+    def _marker_info(self, stage: str) -> dict:
+        """A stage's completion marker, or {} if it has none."""
         marker = self._marker(stage)
         if stage and os.path.exists(marker):
             with open(marker) as f:
-                return int(json.load(f).get("rows_out", -1))
-        return -1
+                return json.load(f)
+        return {}
+
+    def _stage_rows_out(self, stage: str) -> int:
+        """Total rows a completed stage wrote (-1 if unknown/external)."""
+        return int(self._marker_info(stage).get("rows_out", -1))
 
     def _append_checkpoint_rows(self, rows: list[dict]) -> None:
         """Driver-side append of tiny counter tables (a Spark write job

@@ -25,7 +25,9 @@ Operators:
 
 from __future__ import annotations
 
+import glob
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -111,6 +113,53 @@ def _read_keys_if_exists(spark: SparkSession, keys_dir: str) -> DataFrame | None
         raise
 
 
+def _read_prior(spark: SparkSession, index_dir: str, cur: str) -> DataFrame | None:
+    """Index rows of every batch but ``cur``: a replayed batch must not
+    filter against its own failed first attempt. None before the first
+    batch."""
+    existing = _read_keys_if_exists(spark, index_dir)
+    if existing is None:
+        return None
+    return existing.where(F.col("batch").cast("string") != cur)
+
+
+def _drop_seen_keys(spark: SparkSession, out: DataFrame, keys_dir: str, cur: str) -> DataFrame:
+    """Exact cross-batch dedup: anti-join the md5 key index."""
+    prior = _read_prior(spark, keys_dir, cur)
+    if prior is None:
+        return out
+    return out.join(prior.select("content_md5").distinct(), "content_md5", "left_anti")
+
+
+def _md5_index(stored: DataFrame) -> DataFrame:
+    return stored.select("content_md5").distinct()
+
+
+def _prepare_store(
+    spark: SparkSession, store_dir: str, run_tag: str, indexes: dict[str, Callable]
+) -> None:
+    """Driver-side layout guard + index bootstrap before a drain starts
+    (local-path ops, matching StageIO; object-store deployments swap in
+    Hadoop FS).
+
+    A store in the old flat layout (part files directly under
+    ``store_dir``) is rejected. Each index dir in ``indexes`` that an
+    existing store lacks is rebuilt from the store's own columns by its
+    function, so an anti-join is never silently skipped against real
+    data."""
+    if glob.glob(os.path.join(store_dir, "part-*.parquet")):
+        raise ValueError(
+            f"{store_dir} uses the legacy flat layout; migrate its part "
+            "files into a batch=<tag>-<id> subdirectory before re-draining"
+        )
+    missing = [d for d in indexes if not os.path.exists(d)]
+    if not os.path.exists(store_dir) or not missing:
+        return
+    stored = spark.read.option("basePath", store_dir).parquet(store_dir)
+    for d in missing:
+        indexes[d](stored).write.mode("overwrite").parquet(f"{d}/batch=bootstrap-{run_tag}")
+
+
 def run_incremental_exact_dedupe(
     spark: SparkSession,
     input_dir: str,
@@ -153,36 +202,12 @@ def run_incremental_exact_dedupe(
     keys_dir = store_dir + "_keys"
     run_tag = hashlib.sha1(checkpoint_dir.encode("utf-8")).hexdigest()[:8]
 
-    # Driver-side layout guard + key-index bootstrap (local-path ops,
-    # matching StageIO; object-store deployments swap in Hadoop FS).
-    import glob as _glob
-
-    if _glob.glob(os.path.join(store_dir, "part-*.parquet")):
-        raise ValueError(
-            f"{store_dir} uses the legacy flat layout; migrate its part "
-            "files into a batch=<tag>-<id> subdirectory before re-draining"
-        )
-    if os.path.exists(store_dir) and not os.path.exists(keys_dir):
-        (
-            spark.read.option("basePath", store_dir)
-            .parquet(store_dir)
-            .select("content_md5")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{keys_dir}/batch=bootstrap-{run_tag}")
-        )
+    _prepare_store(spark, store_dir, run_tag, {keys_dir: _md5_index})
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         cur = f"{run_tag}-{batch_id}"
         out = batch.select("url", "warc_ts", "content_md5", "lang")
-        existing = _read_keys_if_exists(spark, keys_dir)
-        if existing is not None:
-            prior = (
-                existing.where(F.col("batch").cast("string") != cur)
-                .select("content_md5")
-                .distinct()
-            )
-            out = out.join(prior, "content_md5", "left_anti")
+        out = _drop_seen_keys(spark, out, keys_dir, cur)
         # within-batch dedup: one representative per key
         out = out.withColumn(
             "rn",
@@ -314,7 +339,6 @@ def run_incremental_near_dedupe(
     batch and across batches alike; otherwise this raises before the
     stream starts, so no checkpoint is written.
     """
-    import glob as _glob
     import hashlib
 
     from dedupe_spark.functions.hashing import (
@@ -347,39 +371,26 @@ def run_incremental_near_dedupe(
     # Jaccard evidence — they never enter minhash banding or the index
     has_sig = F.exists(F.col("sig"), lambda x: x != F.lit(0))
 
-    if _glob.glob(os.path.join(store_dir, "part-*.parquet")):
-        raise ValueError(
-            f"{store_dir} uses the legacy flat layout; migrate its part "
-            "files into a batch=<tag>-<id> subdirectory before re-draining"
-        )
     # index bootstrap: a store without its indexes gets them rebuilt
     # (from the store's OWN key columns — still no text re-sketch)
-    if os.path.exists(store_dir):
-        stored = spark.read.option("basePath", store_dir).parquet(store_dir)
-        if not os.path.exists(keys_dir):
-            stored.select("content_md5").distinct().write.mode("overwrite").parquet(
-                f"{keys_dir}/batch=bootstrap-{run_tag}"
-            )
-        if not os.path.exists(lsh_dir):
-            stored.select(
+    _prepare_store(
+        spark,
+        store_dir,
+        run_tag,
+        {
+            keys_dir: _md5_index,
+            lsh_dir: lambda stored: stored.select(
                 F.explode(simhash_band_keys(F.col("simhash"))).alias("band_key"),
                 "simhash",
-            ).distinct().write.mode("overwrite").parquet(
-                f"{lsh_dir}/batch=bootstrap-{run_tag}"
-            )
+            ).distinct(),
+        },
+    )
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         cur = f"{run_tag}-{batch_id}"
         out = batch.select("url", "warc_ts", "content_md5", "simhash", "sig", "lang")
         # 1. exact cross-batch: anti-join the md5 key index
-        existing = _read_keys_if_exists(spark, keys_dir)
-        if existing is not None:
-            prior = (
-                existing.where(F.col("batch").cast("string") != cur)
-                .select("content_md5")
-                .distinct()
-            )
-            out = out.join(prior, "content_md5", "left_anti")
+        out = _drop_seen_keys(spark, out, keys_dir, cur)
         # 2. within-batch exact: one representative per key
         out = (
             out.withColumn(
@@ -396,11 +407,9 @@ def run_incremental_near_dedupe(
         out2 = _within_batch_near_suppress(out, max_hamming)
         # 4. cross-batch near: band-key equi-join against the LSH index,
         #    Hamming refine on the indexed simhash — store never read
-        lsh_existing = _read_keys_if_exists(spark, lsh_dir)
-        if lsh_existing is not None:
-            prior_bands = lsh_existing.where(
-                F.col("batch").cast("string") != cur
-            ).select("band_key", F.col("simhash").alias("stored_simhash"))
+        lsh_prior = _read_prior(spark, lsh_dir, cur)
+        if lsh_prior is not None:
+            prior_bands = lsh_prior.select("band_key", F.col("simhash").alias("stored_simhash"))
             arrival_bands = out2.select(
                 "url",
                 "simhash",
@@ -423,15 +432,11 @@ def run_incremental_near_dedupe(
         #    the once-per-page _mhsig table — catches rewrites whose
         #    simhash drifted past max_hamming but whose shingle sets
         #    still overlap >= min_jaccard. Store never read.
-        mh_existing = _read_keys_if_exists(spark, mh_dir)
-        mhsig_existing = _read_keys_if_exists(spark, mhsig_dir)
-        if mh_existing is not None and mhsig_existing is not None:
-            prior_mh = mh_existing.where(
-                F.col("batch").cast("string") != cur
-            ).select("band_key", "nid")
-            prior_sigs = mhsig_existing.where(
-                F.col("batch").cast("string") != cur
-            ).select("nid", F.col("sig").alias("stored_sig"))
+        mh_prior = _read_prior(spark, mh_dir, cur)
+        mhsig_prior = _read_prior(spark, mhsig_dir, cur)
+        if mh_prior is not None and mhsig_prior is not None:
+            prior_mh = mh_prior.select("band_key", "nid")
+            prior_sigs = mhsig_prior.select("nid", F.col("sig").alias("stored_sig"))
             arrival_mh = out2.where(has_sig).select(
                 "url",
                 "sig",

@@ -46,8 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--hot-threshold", type=int, default=1000)
     p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--threshold", type=float, default=0.5)
-    p.add_argument("--fast-mode", action="store_true",
-                   help="materialize only s5_scored/s7/s8 (fewer stage commits)")
     p.add_argument("--crawl-url-dedup", action="store_true",
                    help="pre-stage: keep only the newest fetch per canonical url")
     p.add_argument("--report-csv", default=None,
@@ -76,15 +74,14 @@ def main(argv: list[str] | None = None) -> int:
         hot_threshold=args.hot_threshold,
         salt_buckets=args.salt_buckets,
         threshold=args.threshold,
-        fast_mode=args.fast_mode,
         crawl_url_dedup=args.crawl_url_dedup,
     )
     t0 = time.time()
     out = run_pipeline(spark, pages, args.work_dir, config=cfg, stop_after=args.stop_after)
     stats = {
         "wall_sec": round(time.time() - t0, 1),
-        "stages_skipped": [k for k, v in out["_skipped"].items() if v],
-        "stages_run": [k for k, v in out["_skipped"].items() if not v],
+        "stages_skipped": [k for k, v in out.skipped.items() if v],
+        "stages_run": [k for k, v in out.skipped.items() if not v],
     }
     if "s7_clusters" in out:
         stats["n_docs"] = out["s7_clusters"].count()

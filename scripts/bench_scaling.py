@@ -94,7 +94,7 @@ def prepare(n_pages: int) -> None:
 
 def run_leg(cores: int, n_pages: int, out_path: str) -> None:
     from dedupe_spark.operators import scoring
-    from dedupe_spark.pipeline import PipelineConfig, run_pipeline
+    from dedupe_spark.pipeline import run_pipeline
     from dedupe_spark.session import get_spark
 
     spark = get_spark(
@@ -125,9 +125,8 @@ def run_leg(cores: int, n_pages: int, out_path: str) -> None:
         t_score = min(t_score, time.time() - t0)
 
     # -- workload 2: full pipeline pages / sec -------------------------
-    # fast_mode: commit only the resume-critical stages; full-commit
-    # mode's extra writes are a fixed cost that would measure the
-    # sandbox filesystem, not job scalability.
+    # the default config, which commits every stage; the work dir is
+    # emptied first so nothing is resumed.
     t_pipe = float("inf")
     cluster_hash = None
     for _ in range(2):
@@ -136,7 +135,7 @@ def run_leg(cores: int, n_pages: int, out_path: str) -> None:
         spark.catalog.clearCache()
         pages = spark.read.parquet(corpus_dir(n_pages))
         t0 = time.time()
-        out = run_pipeline(spark, pages, work, config=PipelineConfig(fast_mode=True))
+        out = run_pipeline(spark, pages, work)
         t_pipe = min(t_pipe, time.time() - t0)
         cl = sorted((r["doc_id"], r["cluster_id"]) for r in out["s7_clusters"].collect())
         cluster_hash = hashlib.sha256(repr(cl).encode()).hexdigest()

@@ -1,10 +1,9 @@
 """Large-scale robustness run: full ER pipeline + pairwise F1 at the
 largest corpus the sandbox comfortably holds.
 
-Usage: python scripts/robustness_run.py [n_pages] [--full-commit] [--pairwise-dense]
+Usage: python scripts/robustness_run.py [n_pages] [--pairwise-dense]
 
-Generates the deterministic corpus (seed 42), runs the pipeline
-(fast_mode by default; --full-commit materializes every stage),
+Generates the deterministic corpus (seed 42), runs the pipeline,
 evaluates pairwise F1 on labeled same-block pairs (BASELINE.json
 metric) with the hot-block-safe scalable evaluator
 (--pairwise-dense forces the pair-materializing one — quadratic in
@@ -26,13 +25,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
-    fast = "--full-commit" not in sys.argv
 
     from pyspark.sql import functions as F
 
     from dedupe_spark import evaluate
     from dedupe_spark.corpus import generate_pages
-    from dedupe_spark.pipeline import PipelineConfig, run_pipeline
+    from dedupe_spark.pipeline import run_pipeline
     from dedupe_spark.session import get_spark
 
     cores = len(os.sched_getaffinity(0))
@@ -51,9 +49,7 @@ def main() -> None:
     work = f"/tmp/robust_wd_{n_pages}"
     shutil.rmtree(work, ignore_errors=True)
     t0 = time.time()
-    out = run_pipeline(
-        spark, pages, work, config=PipelineConfig(fast_mode=fast)
-    )
+    out = run_pipeline(spark, pages, work)
     n_clusters = out["s8_report"].count()  # forces the full DAG
     t_pipe = time.time() - t0
 
@@ -76,7 +72,6 @@ def main() -> None:
         json.dumps(
             {
                 "n_pages": n_pages,
-                "fast_mode": fast,
                 "t_pipeline_sec": round(t_pipe, 1),
                 "pages_per_sec": round(n_pages / t_pipe, 1),
                 "n_pairs_scored": out["s5_scored"].count(),

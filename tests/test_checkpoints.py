@@ -46,6 +46,42 @@ def test_rows_in_recorded(spark, io):
     assert sum(r["rows_out"] for r in child_rows) == 5
 
 
+def test_stage_clock_includes_build(spark, io):
+    """The checkpoint rows' [t_start, t_end] spans the stage's build, not
+    only its write: eager work inside a build is timed."""
+    import time
+
+    started = []
+
+    def build():
+        started.append(time.time())
+        time.sleep(0.3)
+        return _df(spark, [(1, "a")])
+
+    io.run_stage("slow", build)
+    rows = io.checkpoints().where(F.col("stage") == "slow").collect()
+    assert rows
+    for r in rows:
+        assert r["t_start"] <= started[0] and r["t_end"] - r["t_start"] >= 0.3, r
+
+
+def test_read_uses_marker_schema_and_falls_back_without_it(spark, io):
+    """A committed stage reads back with the schema its marker recorded;
+    a marker written before markers carried a schema still reads."""
+    import json
+
+    io.run_stage("t", lambda: _df(spark, [(1, "a"), (2, "b")]))
+    marker = io._marker("t")
+    with open(marker) as f:
+        info = json.load(f)
+    assert io.read("t").schema.json() == info["schema"]
+    del info["schema"]
+    with open(marker, "w") as f:
+        json.dump(info, f)
+    got = io.read("t")
+    assert got.columns == ["id", "v"] and got.count() == 2
+
+
 def test_delete_by_key_list(spark, io):
     io.run_stage("t", lambda: _df(spark, [(1, "a"), (2, "b"), (3, "c")]))
     io.delete([1, 3], "t", "id")

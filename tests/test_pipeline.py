@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark import evaluate
-from dedupe_spark.pipeline import PipelineConfig, run_pipeline
+from dedupe_spark.pipeline import STAGES, PipelineConfig, run_pipeline
 
 
 @pytest.fixture(scope="module")
@@ -104,10 +104,10 @@ def test_resume_skips_completed_stages(spark, corpus, tmp_path):
     work = str(tmp_path / "resume")
     # run only through s4 (simulated kill)
     first = run_pipeline(spark, corpus, work, stop_after="s4_pairs")
-    assert not first["_skipped"]["s1_docs"]
+    assert not first.skipped["s1_docs"]
     # resume: s1-s4 must be skipped, rest computed
     second = run_pipeline(spark, corpus, work)
-    skipped = second["_skipped"]
+    skipped = second.skipped
     assert all(skipped[s] for s in ["s1_docs", "s2_exact", "s3_keys", "s4_pairs"])
     assert not skipped["s7_clusters"]
     # identical final output vs a fresh uninterrupted run
@@ -124,12 +124,12 @@ def test_partial_write_without_marker_recomputed(spark, corpus, tmp_path):
 
     work = str(tmp_path / "partial")
     first = run_pipeline(spark, corpus, work, stop_after="s2_exact")
-    assert not first["_skipped"]["s2_exact"]
+    assert not first.skipped["s2_exact"]
     # simulate crash: drop s2's marker but keep its (possibly torn) data
     os.remove(f"{work}/_checkpoint_s2_exact.json")
     second = run_pipeline(spark, corpus, work, stop_after="s2_exact")
-    assert second["_skipped"]["s1_docs"]
-    assert not second["_skipped"]["s2_exact"]  # recomputed
+    assert second.skipped["s1_docs"]
+    assert not second.skipped["s2_exact"]  # recomputed
 
 
 def test_lineage_counters_written(spark, corpus, pipe):
@@ -143,39 +143,6 @@ def test_lineage_counters_written(spark, corpus, pipe):
         ckpt.where(F.col("stage") == "s1_docs").agg(F.sum("rows_out")).collect()[0][0]
     )
     assert s1_total == out["s1_docs"].count()
-
-
-def test_fast_mode_same_clusters_fewer_commits(spark, corpus, tmp_path):
-    """fast_mode must produce identical clusters while committing only
-    s5_scored/s7_clusters/s8_report to the stage store."""
-    import os
-
-    work = str(tmp_path / "fast")
-    cfg = PipelineConfig(fast_mode=True)
-    out = run_pipeline(spark, corpus, work, config=cfg)
-    full = run_pipeline(spark, corpus, str(tmp_path / "full"))
-    a = {(r["doc_id"], r["cluster_id"]) for r in out["s7_clusters"].collect()}
-    b = {(r["doc_id"], r["cluster_id"]) for r in full["s7_clusters"].collect()}
-    assert a == b
-    committed = {f for f in os.listdir(work) if f.startswith("_checkpoint_")}
-    assert committed == {
-        "_checkpoint_s5_scored.json",
-        "_checkpoint_s7_clusters.json",
-        "_checkpoint_s8_report.json",
-    }
-    # resume in fast mode: the scored-pairs invariant still holds
-    again = run_pipeline(spark, corpus, work, config=cfg)
-    assert again["_skipped"]["s5_scored"]
-
-
-def test_fast_mode_reuses_full_mode_commits(spark, corpus, tmp_path):
-    """A fast_mode rerun over a full-mode work_dir reads the committed
-    ephemeral stages instead of recomputing them."""
-    work = str(tmp_path / "mixed")
-    run_pipeline(spark, corpus, work, stop_after="s3_keys")
-    out = run_pipeline(spark, corpus, work, config=PipelineConfig(fast_mode=True))
-    assert all(out["_skipped"][s] for s in ["s1_docs", "s2_exact", "s3_keys"])
-    assert not out["_skipped"]["s5_scored"]
 
 
 def test_stop_after_s7_skips_report(spark, corpus, tmp_path):
@@ -293,21 +260,28 @@ def test_scalable_f1_refuses_invalid_decomposition(spark, corpus, pipe):
         evaluate.pairwise_f1_scalable(out["s2_exact"], out["s3_keys"], truth, lossy)
 
 
-def test_fast_mode_resume_runs_no_jobs_for_pairs(spark, corpus, tmp_path):
-    """A fast_mode resume with s5/s7/s8 committed must not recompute
-    the extraction/sketch lineage (the capped-block audit is skipped)."""
-    work = str(tmp_path / "fastresume")
-    cfg = PipelineConfig(fast_mode=True)
-    run_pipeline(spark, corpus, work, config=cfg)
+def test_resume_runs_no_jobs(spark, corpus, tmp_path):
+    """A rerun over a fully committed work dir reads every stage with the
+    schema its marker recorded and builds none, so it starts no Spark
+    job (no schema inference, no capped-block audit, no extraction)."""
+    work = str(tmp_path / "resume_jobs")
+    run_pipeline(spark, corpus, work)
     tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    out = run_pipeline(spark, corpus, work, config=cfg)
-    after = tracker.getJobIdsForGroup(None)
-    assert out["_skipped"]["s5_scored"] and out["_skipped"]["s7_clusters"]
-    # resume reads the 3 committed stages' parquet footers (one tiny
-    # job each) but must NOT run the corpus-wide extract/sketch lineage
-    # (which takes >3 jobs: scan+agg+join stages per build)
-    assert len(after) - len(before) <= 3, (before, after)
+    before = set(tracker.getJobIdsForGroup(None))
+    out = run_pipeline(spark, corpus, work)
+    after = set(tracker.getJobIdsForGroup(None))
+    assert all(out.skipped[s] for s in STAGES), out.skipped
+    assert after - before == set()
+
+
+def test_bad_stop_after_raises_before_any_stage(spark, corpus, tmp_path):
+    """A stop_after outside STAGES is refused before anything runs; it
+    never falls through to a full run."""
+    work = tmp_path / "bad_stop"
+    for bad in ("s6_scored", "s4_pair"):
+        with pytest.raises(ValueError, match="stop_after"):
+            run_pipeline(spark, corpus, str(work), stop_after=bad)
+    assert not work.exists()
 
 
 def test_s5_features_match_python_twins(spark, corpus, pipe):
@@ -373,7 +347,7 @@ def test_s5_build_runs_no_path_gate_job(spark, corpus, tmp_path):
         after = tracker.getJobIdsForGroup(None)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert out["_skipped"]["s4_pairs"] and not out["_skipped"]["s5_scored"]
+    assert out.skipped["s4_pairs"] and not out.skipped["s5_scored"]
     assert len(after) - len(before) <= 7, (before, after)
 
 
